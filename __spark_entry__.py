@@ -26,6 +26,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from searchengine_spark.fixtures import STOP_WORDS_PATH
 from searchengine_spark.indexing.build import Bm25Params, build_index
 from searchengine_spark.indexing.docids import with_doc_ids
 from searchengine_spark.query.bm25 import bm25_topk_batch
@@ -3828,7 +3829,7 @@ TRANSCRIPTS_QUERIES = ["greatest rock album", "house party songs"]
 def _transcripts_cfg() -> TokenizerConfig:
     return TokenizerConfig(
         min_token_length=3,
-        stop_words=TokenizerConfig.load_stop_words("/root/reference/stop_words.txt"),
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH),
     )
 
 

@@ -82,11 +82,12 @@ def run_suite(spark, sf: float, cpus: int) -> dict:
     from searchengine_spark.indexing.build import Bm25Params
     from searchengine_spark.indexing.packed import build_packed_index, load_packed_index
     from searchengine_spark.query.wand import bm25_topk_packed_batch
+    from searchengine_spark.fixtures import STOP_WORDS_PATH
     from searchengine_spark.tokenizer import TokenizerConfig
 
     cfg = TokenizerConfig(min_token_length=3,
                           stop_words=TokenizerConfig.load_stop_words(
-                              "/root/reference/stop_words.txt"))
+                              STOP_WORDS_PATH))
     params = Bm25Params(k=1.2, b=0.75)
     n_conv = int(os.environ.get("SPARK_GRAFT_N_CONV", 0)) or max(200, int(500_000 * sf))
     idx_path = os.path.join(OUT, f"index_sf{sf}_c{cpus}")
@@ -398,11 +399,12 @@ def run_esops(spark, sf: float) -> dict:
         bm25_scores_packed_batch,
         bm25_topk_packed_batch,
     )
+    from searchengine_spark.fixtures import STOP_WORDS_PATH
     from searchengine_spark.tokenizer import TokenizerConfig
 
     cfg = TokenizerConfig(min_token_length=3,
                           stop_words=TokenizerConfig.load_stop_words(
-                              "/root/reference/stop_words.txt"))
+                              STOP_WORDS_PATH))
     n_conv = int(os.environ.get("SPARK_GRAFT_N_CONV", 0)) or max(200, int(500_000 * sf))
     corpus_path = os.path.join(OUT, f"corpus_{n_conv}.parquet")
     if not os.path.exists(os.path.join(corpus_path, "_SUCCESS")):
@@ -656,11 +658,12 @@ def run_federated(spark, sf: float) -> dict:
     from searchengine_spark.indexing.packed import build_packed_index, load_packed_index
     from searchengine_spark.query.federated import bm25_topk_federated
     from searchengine_spark.query.serve import FederatedLocalSearcher
+    from searchengine_spark.fixtures import STOP_WORDS_PATH
     from searchengine_spark.tokenizer import TokenizerConfig
 
     cfg = TokenizerConfig(min_token_length=3,
                           stop_words=TokenizerConfig.load_stop_words(
-                              "/root/reference/stop_words.txt"))
+                              STOP_WORDS_PATH))
     n_conv = int(os.environ.get("SPARK_GRAFT_N_CONV", 0)) or max(200, int(500_000 * sf))
     n_shards = int(os.environ.get("SPARK_GRAFT_FED_SHARDS", 4))
     corpus_path = os.path.join(OUT, f"corpus_{n_conv}.parquet")

@@ -19,7 +19,7 @@ streams straight to parquet — ONE Spark job, no driver collect (the
 batch-serving contract). Without it, per-query match counts print as
 one JSON line each (the doc table never lands on the driver either
 way). A tokenizer built like the index default (min length 3 + the
-reference stop list) is used unless --min-token-length/--stop-words
+committed stop list) is used unless --min-token-length/--stop-words
 override; percolation has no index, so there is no manifest to inherit
 from — keep these flags in sync with the forward index if you want
 doc <-> query agreement with retrieval.
@@ -62,12 +62,13 @@ def main() -> None:
                          "overwrite idempotently")
     ap.add_argument("--min-token-length", type=int, default=3)
     ap.add_argument("--stop-words", default=None,
-                    help="stop-word file (default: the reference list if "
-                         "present, else none)")
+                    help="stop-word file (default: the committed "
+                         "126-word list, searchengine_spark/fixtures)")
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
 
+    from searchengine_spark.fixtures import STOP_WORDS_PATH
     from searchengine_spark.query.percolate import percolate, register_queries
     from searchengine_spark.tokenizer import TokenizerConfig
 
@@ -76,10 +77,7 @@ def main() -> None:
     if not queries:
         raise SystemExit(f"{args.queries_file} holds no queries")
 
-    sw = None
-    sw_path = args.stop_words or "/root/reference/stop_words.txt"
-    if os.path.exists(sw_path):
-        sw = TokenizerConfig.load_stop_words(sw_path)
+    sw = TokenizerConfig.load_stop_words(args.stop_words or STOP_WORDS_PATH)
     cfg = TokenizerConfig(min_token_length=args.min_token_length,
                           stop_words=sw)
     stored = register_queries(queries, cfg,

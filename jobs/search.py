@@ -204,9 +204,10 @@ def _topk_frame(spark, pidx, cfg, queries, ranker, n, exhaustive,
                 or search_after is not None or collapse is not None
                 or demote is not None or min_match is not None
                 or dismax is not None or sort_spec is not None
-                or decay_spec is not None or fvf_spec is not None):
+                or decay_spec is not None or fvf_spec is not None
+                or pins is not None or random_seed is not None):
             raise SystemExit("--rescore combines only with plain bm25 "
-                             "retrieval")
+                             "retrieval (not --pin or --random-score)")
         from searchengine_spark.query.rescore import rescore_topk
         from searchengine_spark.query.wand import resolve_docs as _resolve
 

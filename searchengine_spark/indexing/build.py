@@ -44,6 +44,14 @@ class Bm25Params:
     b: float = 0.75
 
 
+def idf_col(n_live: int, df: str = "df"):
+    """The stored idf, round(ln(N_live / df), 3) — the reference's 3-dp
+    footer contract (spimi.py:233-242). Every term_stats writer (build,
+    append, delete) and every federation-global recompute uses this one
+    expression, so a stored idf and its recomputation agree bit for bit."""
+    return F.round(F.log(F.lit(float(max(n_live, 1))) / F.col(df)), 3)
+
+
 @dataclass
 class IndexTables:
     docs: DataFrame           # transcripts + doc_id + tokens
@@ -131,9 +139,7 @@ def build_index(
     # df is exact (feeds idf -> scores; approx_count_distinct is NOT ok,
     # SURVEY.md §2.5); index rows are already unique on (term, doc_id)
     term_stats = index.groupBy("term").agg(F.count("*").alias("df"))
-    term_stats = term_stats.withColumn(
-        "idf", F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 3)
-    )
+    term_stats = term_stats.withColumn("idf", idf_col(n_docs))
 
     map_cols = [c for c in order_cols if c != DOC_ID]
     return IndexTables(

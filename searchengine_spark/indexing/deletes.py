@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import fsio
+from .build import idf_col
 from .codec import decode_positions, decode_postings
 
 _STASH_CAP = 8192  # dead-weakref purge threshold for the paired-decoder stash
@@ -262,9 +263,7 @@ def delete_docs(
             (F.col("df") - F.coalesce(F.col("df_delta"), F.lit(0))).alias("df"),
         )
         .filter(F.col("df") > 0)  # fully-deleted terms leave the dictionary
-        .withColumn(
-            "idf", F.round(F.log(F.lit(float(max(new_live, 1))) / F.col("df")), 3)
-        )
+        .withColumn("idf", idf_col(new_live))
     )
     new_ts_dir = f"term_stats_d{version}"
     merged.coalesce(8).write.mode("overwrite").parquet(fsio.join(path, new_ts_dir))

@@ -55,8 +55,8 @@ from pyspark.sql import types as T
 
 from ..tokenizer import TokenizerConfig, tokens_column
 from . import fsio
-from .build import Bm25Params
-from .codec import encode_postings, tf_saturation
+from .build import Bm25Params, idf_col
+from .codec import tf_saturation
 from .docids import DOC_ID, unpersist_doc_ids, with_doc_ids
 
 DEFAULT_CHUNK_DOCS = 1 << 16  # postings chunk = 65536-doc range
@@ -90,67 +90,6 @@ def _stage_dirs(path: str) -> dict:
         "manifest": fsio.join(path, "manifest.json"),
         "state": fsio.join(path, "build_state.json"),
     }
-
-
-def _encode_group(params: Bm25Params, payload: str = "freq",
-                  positional: bool = False):
-    """Per-(term, chunk) encoder for applyInPandas — used by the streaming
-    append path where batches are small. The bulk build uses the vectorized
-    partition encoder below (_encode_partition). ``payload='tfidf'``: the
-    dlq column carries wq (stored weight ×1000) and the chunk bound is the
-    max stored weight. ``payload='boolean'``: doc gaps only (bound 1.0).
-    ``positional=True``: input rows are token OCCURRENCES (doc_id, dlq,
-    pos); postings derive from run lengths and the position stream encodes
-    per-posting deltas — all mirroring _encode_partition."""
-    k, b = float(params.k), float(params.b)
-
-    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .codec import encode_doc_groups, encode_position_groups
-
-        pos_buf = None
-        if positional:
-            pdf = pdf.sort_values(["doc_id", "pos"])
-            occ_docs = pdf["doc_id"].to_numpy(np.int64)
-            n = len(occ_docs)
-            newp = np.empty(n, dtype=bool)
-            newp[0] = True
-            newp[1:] = occ_docs[1:] != occ_docs[:-1]
-            pstarts = np.flatnonzero(newp)
-            doc_ids = occ_docs[pstarts]
-            tfs = np.diff(np.append(pstarts, n))
-            dlqs = pdf["dlq"].to_numpy(np.int64)[pstarts]
-            pos_buf = encode_position_groups(
-                np.zeros(1, np.int64), pstarts, pdf["pos"].to_numpy(np.int64)
-            )[0]
-        else:
-            pdf = pdf.sort_values("doc_id")
-            doc_ids = pdf["doc_id"].to_numpy(np.int64)
-            tfs = pdf["tf"].to_numpy(np.int64)
-            dlqs = pdf["dlq"].to_numpy(np.int64)
-        dl_norm = dlqs.astype(np.float64) / 1000.0
-        if payload == "boolean":
-            buf = encode_doc_groups(np.zeros(1, np.int64), doc_ids)[0][0]
-            sat = np.ones(1, dtype=np.float64)
-        else:
-            buf = encode_postings(doc_ids, tfs, dlqs)
-            if payload == "tfidf":
-                sat = dl_norm  # slot 3 is wq: bound = max stored weight
-            else:
-                sat = tf_saturation(tfs, dl_norm, k, b)
-        return pd.DataFrame(
-            {
-                "term": [pdf["term"].iloc[0]],
-                "chunk": [int(pdf["chunk"].iloc[0])],
-                "df_chunk": [len(doc_ids)],
-                "first_doc": [int(doc_ids[0])],
-                "last_doc": [int(doc_ids[-1])],
-                "max_tfsat": [float(sat.max())],
-                "postings": [buf],
-                "positions": [pos_buf],
-            }
-        )
-
-    return encode
 
 
 def _encode_partition(
@@ -507,9 +446,7 @@ def build_packed_index(
     t0 = time.perf_counter()
     if not (resume and _done(spark, dirs["term_stats"])):
         ts = index.groupBy("term").agg(F.sum("df_chunk").alias("df"))
-        ts = ts.withColumn(
-            "idf", F.round(F.log(F.lit(float(n_docs)) / F.col("df")), 3)
-        )
+        ts = ts.withColumn("idf", idf_col(n_docs))
         ts.coalesce(8).write.mode("overwrite").parquet(dirs["term_stats"])
     metrics["stages"]["term_stats"] = time.perf_counter() - t0
 

@@ -11,11 +11,12 @@ Statistics contract (the Elasticsearch ``dfs_query_then_fetch`` analog):
 
 - **idf is federation-global and exact**: per-term df and the live corpus
   size N sum across shards (disjoint corpora), and idf = round(ln(N/df), 3)
-  — the identical formula/rounding the build and the delete path use
-  (indexing/packed.py, indexing/deletes.py:238), computed with the same
-  Spark expression so single-shard federation is bit-identical to plain
-  packed serving. Naive federation (each shard ranking by its LOCAL idf)
-  is how cross-shard rankings drift — we never blend per-shard idf.
+  — the one expression every term_stats writer uses
+  (indexing/build.idf_col). At N=1 that IS the stored idf, so a
+  one-shard federation reads it as is, and plain packed serving
+  (query/wand.py) is exactly this module's plan over ``[pidx]``. Naive
+  federation (each shard ranking by its LOCAL idf) is how cross-shard
+  rankings drift — we never blend per-shard idf.
 - **dl_norm is shard-local**: postings store dl_norm quantized against the
   shard's own avgdl at build time (the reference's 3-dp footer contract,
   bm25.py:76-81), and 3-dp rounding is not invertible, so a federated
@@ -43,6 +44,8 @@ the same decode hooks plain serving uses.
 
 from __future__ import annotations
 
+from collections import Counter
+from dataclasses import dataclass
 from functools import reduce
 from typing import List, Sequence
 
@@ -51,9 +54,17 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..indexing.build import Bm25Params, idf_col
 from ..indexing.packed import PackedIndex
 from ..tokenizer import TokenizerConfig, tokenize_text
-from .wand import _TOPK_SCHEMA, _wand_scorer
+from .wand import (
+    _SCORES_SCHEMA,
+    _TOPK_SCHEMA,
+    _allowed_by_chunk,
+    _boost_by_chunk,
+    _flat_scorer,
+    _wand_scorer,
+)
 
 # shards must have been built under one contract for their stored blocks
 # to be mutually rankable (same bar the shard merge sets, indexing/merge.py).
@@ -178,51 +189,66 @@ def _doc_bases(shards: Sequence[PackedIndex]) -> List[int]:
     return bases
 
 
+def _shift(base: int):
+    """Shard-local doc_id -> federation-global doc_id (order-preserving)."""
+    return (F.col("doc_id").cast("long") + F.lit(base)).alias("doc_id")
+
+
+def _shifted_union(shards: Sequence[PackedIndex], local_fn, cols) -> DataFrame:
+    """Run ``local_fn`` on every shard, shift its doc ids into the
+    federation namespace and union the results (plan-level, no exchange):
+    (query_id, doc_id, *cols)."""
+    return reduce(DataFrame.unionByName, [
+        local_fn(s).select("query_id", _shift(base), *cols)
+        for s, base in zip(shards, _doc_bases(shards))
+    ])
+
+
 def _global_idf(shards: Sequence[PackedIndex], terms: List[str]) -> dict:
-    """Federation-exact idf for the (bounded) query-term set: ONE union
-    scan of the term-pruned term_stats sidecars, df summed across shards,
-    then the build's own idf expression (same F.round/F.log — bit-identity
-    with what a single index over the union corpus would store)."""
+    """Federation-exact idf for the (bounded) query-term set; the term
+    filter pushes into every sidecar scan. One shard reads its stored idf:
+    the same expression over the same df and N_live wrote it
+    (indexing/build.idf_col), and reading it costs no aggregation job."""
     if not terms:
         return {}
-    n_live = sum(
-        int(s.manifest.get("n_docs_live", s.manifest["n_docs"])) for s in shards
-    )
-    parts = [
-        s.term_stats.filter(F.col("term").isin(terms)).select(
-            "term", F.col("df").cast("long").alias("df")
-        )
-        for s in shards
-    ]
-    summed = (
-        reduce(DataFrame.unionByName, parts)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"))
-        .filter(F.col("df") > 0)
-        .select(
-            "term",
-            F.round(
-                F.log(F.lit(float(max(n_live, 1))) / F.col("df")), 3
-            ).alias("idf"),
-        )
-    )
-    return {r["term"]: float(r["idf"]) for r in summed.collect()}
+    stats = (shards[0].term_stats.select("term", "idf") if len(shards) == 1
+             else _global_term_stats(shards))
+    return {
+        r["term"]: float(r["idf"])
+        for r in stats.filter(F.col("term").isin(terms)).collect()
+    }
 
 
 def _global_dictionary(shards: Sequence[PackedIndex]) -> DataFrame:
     """The federation's live (term, df) dictionary: df sums over the
     disjoint shard corpora — EXACTLY the merged index's term_stats, from
-    one plan-level union of the vocabulary-sized sidecars. Feeds the
-    federated suggest / fuzzy surfaces."""
+    one plan-level union of the vocabulary-sized sidecars (one shard's
+    sidecar is read as is: it holds live terms only, deletes drop df=0
+    rows). Feeds the federated suggest / fuzzy surfaces."""
     parts = [
         s.term_stats.select("term", F.col("df").cast("long").alias("df"))
         for s in shards
     ]
+    if len(parts) == 1:
+        return parts[0]
     return (
         reduce(DataFrame.unionByName, parts)
         .groupBy("term")
         .agg(F.sum("df").alias("df"))
         .filter(F.col("df") > 0)
+    )
+
+
+def _global_term_stats(shards: Sequence[PackedIndex]) -> DataFrame:
+    """(term, idf) over the federation, recomputed: df and the live
+    corpus size N summed across disjoint shards, then the build's own idf
+    expression. Vocabulary-sized (one union-scan of the sidecars); a term
+    filter on it pushes into every sidecar scan."""
+    n_live = sum(
+        int(s.manifest.get("n_docs_live", s.manifest["n_docs"])) for s in shards
+    )
+    return _global_dictionary(shards).select(
+        "term", idf_col(n_live).alias("idf")
     )
 
 
@@ -342,294 +368,15 @@ def bm25_topk_federated(
     (shard, chunk), so the chunk-local demotion is exact under both
     gathers; demotion only lowers scores, so the merge and pruning
     arguments hold unchanged."""
-    if gather == "auto":
-        gather = "single" if len(shards) <= AUTO_GATHER_SINGLE_MAX else "two_phase"
-    if gather not in ("two_phase", "single"):
-        raise ValueError(
-            f"gather must be 'auto', 'two_phase' or 'single', got {gather!r}"
-        )
-    _check_compat(shards)
-    spark = shards[0].spark
-    chunk_docs = int(shards[0].manifest["chunk_docs"])
-    params = shards[0].params
-    if fuzzy and term_weights:
-        raise ValueError(
-            "fuzzy OOV rewriting would orphan term_weights keys — "
-            "correct the terms first, then pass weights on the final terms"
-        )
-
-    rows = []
-    if query_terms is not None:
-        # pre-tokenized unique term lists (the PRF/MLT seam, wand.py twin)
-        for qid, terms in enumerate(query_terms):
-            for t in dict.fromkeys(terms):
-                rows.append((qid, t))
-    else:
-        for qid, q in enumerate(queries):
-            # unique terms per query — the reference's multiplicity quirk
-            # (bm25.py:44-53), same as the single-index path
-            for t in dict.fromkeys(tokenize_text(q, cfg)):
-                rows.append((qid, t))
-    if not rows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    all_terms = sorted({t for _, t in rows})
-    idf_map = _global_idf(shards, all_terms)
-
-    # the idf collect doubles as the federation-wide vocabulary probe
-    # (wand.py's pattern): correct ONLY the globally-missing terms against
-    # the federation dictionary, then re-pin idf for the corrected set
-    oov = [t for t in all_terms if t not in idf_map]
-    if fuzzy and oov:
-        from .fuzzy import correct_terms
-
-        corr = correct_terms(_global_dictionary(shards), oov)
-        if corr:
-            # re-dedupe per query: two typos may correct to the same term,
-            # and a duplicate (qid, term) would double-score via the fan-out
-            rows = list(dict.fromkeys((qid, corr.get(t, t)) for qid, t in rows))
-            all_terms = sorted({t for _, t in rows})
-            idf_map = _global_idf(shards, all_terms)
-
-    require_all = None
-    if conjunctive:
-        # ranked AND across the federation (wand.py's single-index twin):
-        # a doc lives in exactly one shard, so its matched-term coverage is
-        # decided inside that shard's scorer group under BOTH gather
-        # topologies — require_all counts stay exact. A query with a term
-        # absent from EVERY shard matches nothing federation-wide.
-        n_req: dict[int, int] = {}
-        dead: set[int] = set()
-        for qid, t in rows:
-            n_req[qid] = n_req.get(qid, 0) + 1
-            if t not in idf_map:
-                dead.add(qid)
-        rows = [(qid, t) for qid, t in rows if qid not in dead]
-        if not rows:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        require_all = {q: n for q, n in n_req.items() if q not in dead}
-        all_terms = sorted({t for _, t in rows})
-
-    ex_map: dict[int, set] | None = None
-    ex_rows: list = []
-    if exclude_terms:
-        live = {qid for qid, _ in rows}
-        ex_map = {
-            int(qid): set(ts)
-            for qid, ts in exclude_terms.items()
-            if ts and int(qid) in live
-        } or None
-    if ex_map:
-        ex_t = sorted({t for s in ex_map.values() for t in s})
-        new = [t for t in ex_t if t not in idf_map]
-        if new:
-            # presence probe only — absent-everywhere terms exclude nothing
-            idf_map.update(_global_idf(shards, new))
-        ex_rows = [
-            (qid, t)
-            for qid, s in sorted(ex_map.items())
-            for t in sorted(s)
-            if t in idf_map
-        ]
-        all_terms = sorted(set(all_terms) | {t for _, t in ex_rows})
-
-    dem_map: dict[int, set] | None = None
-    dem_keep: dict[int, set] | None = None
-    dem_rows: list = []
-    if demote_terms:
-        if not 0.0 <= float(negative_boost) < 1.0:
-            raise ValueError(
-                f"negative_boost must be in [0, 1), got {negative_boost}"
-            )
-        live = {qid for qid, _ in rows}
-        pos_by_q: dict[int, set] = {}
-        for qid, t in rows:
-            pos_by_q.setdefault(qid, set()).add(t)
-        dem_map = {
-            int(qid): set(ts)
-            for qid, ts in demote_terms.items()
-            if ts and int(qid) in live
-        } or None
-        if dem_map:
-            if exclude_terms:
-                for qid, ts in dem_map.items():
-                    both = ts & set(exclude_terms.get(qid, ()) or ())
-                    if both:
-                        raise ValueError(
-                            f"terms {sorted(both)} are both demoted and "
-                            f"excluded for query {qid} — pick one"
-                        )
-            new_t = sorted(
-                {t for ts in dem_map.values() for t in ts} - set(idf_map)
-            )
-            if new_t:
-                idf_map.update(_global_idf(shards, new_t))
-            dem_keep = {
-                qid: (ts & pos_by_q.get(qid, set()))
-                for qid, ts in dem_map.items()
-            }
-            dem_rows = [
-                (qid, t)
-                for qid, ts in sorted(dem_map.items())
-                for t in sorted(ts)
-                if t in idf_map
-            ]
-            all_terms = sorted(set(all_terms) | {t for _, t in dem_rows})
-
-    bases = _doc_bases(shards)
-    parts = []
-    for s, base in zip(shards, bases):
-        parts.append(
-            s.index.filter(F.col("term").isin(all_terms)).select(
-                "term",
-                (F.col("chunk") + F.lit(base // chunk_docs)).alias("chunk"),
-                "max_tfsat",
-                "postings",
-                F.lit(base).cast("long").alias("doc_base"),
-            )
-        )
-    pruned = reduce(DataFrame.unionByName, parts)
-
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, t in rows:
-        qids_by_term.setdefault(t, []).append(qid)
-    for qid, t in ex_rows:
-        # negated rows ride the same fan-out (wand.py twin); skip the dup
-        # when a term is both positive and negated for one query
-        if qid not in qids_by_term.setdefault(t, []):
-            qids_by_term[t].append(qid)
-    for qid, t in dem_rows:
-        # demote rows join the fan-out; positive+demoted single rows are
-        # routed to both roles by the scorer's demote_keep
-        if qid not in qids_by_term.setdefault(t, []):
-            qids_by_term[t].append(qid)
-    map_entries = [
-        x
-        for t, qs in qids_by_term.items()
-        if t in idf_map  # absent everywhere -> matches nothing (OR)
-        for x in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
-    ]
-    if not map_entries:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    matched = pruned.withColumn(
-        "query_id", F.explode(F.create_map(*map_entries)[F.col("term")])
+    return _bm25_topk(
+        shards, queries, cfg, k=k, exhaustive=exhaustive, round_dp=round_dp,
+        gather=gather, fuzzy=fuzzy, conjunctive=conjunctive,
+        doc_filters=doc_filters, doc_boosts=doc_boosts,
+        query_terms=query_terms, term_weights=term_weights,
+        exclude_terms=exclude_terms, offset=offset, search_after=search_after,
+        min_should_match=min_should_match, demote_terms=demote_terms,
+        negative_boost=negative_boost,
     )
-
-    from .wand import _allowed_by_chunk, _boost_by_chunk
-
-    def _shift_ids(frames, extra=()):
-        parts_ = []
-        for s, base, f in zip(shards, bases, frames):
-            parts_.append(
-                f.select(
-                    (F.col("doc_id").cast("long") + F.lit(base)).alias("doc_id"),
-                    *extra,
-                )
-            )
-        return parts_
-
-    if doc_filters is not None:
-        if len(doc_filters) != len(shards):
-            raise ValueError(
-                f"doc_filters has {len(doc_filters)} frames for "
-                f"{len(shards)} shards — build one per shard"
-            )
-        allowed = reduce(
-            DataFrame.unionByName,
-            [_allowed_by_chunk(shards[0], f) for f in _shift_ids(doc_filters)],
-        )
-        # inner join: chunks whose allowed-set is empty vanish before decode
-        matched = matched.join(allowed, "chunk")
-    if doc_boosts is not None:
-        if len(doc_boosts) != len(shards):
-            raise ValueError(
-                f"doc_boosts has {len(doc_boosts)} frames for "
-                f"{len(shards)} shards — build one per shard"
-            )
-        boosts = reduce(
-            DataFrame.unionByName,
-            [_boost_by_chunk(shards[0], f)
-             for f in _shift_ids(doc_boosts, extra=("boost",))],
-        )
-        # LEFT join: chunks without boosted docs keep default 1.0 boosts
-        matched = matched.join(boosts, "chunk", "left")
-
-    # per-shard tombstone masks ride per-base decode hooks; shards without
-    # deletes fall through to the default decoder
-    decoders: dict[int, object] = {}
-    for s, base in zip(shards, bases):
-        mask = s.delete_mask()
-        if mask is not None:
-            decoders[base] = mask.wrap_decoders()[0]
-
-    if offset < 0:
-        raise ValueError(f"offset must be >= 0, got {offset}")
-    if search_after is not None and offset:
-        raise ValueError(
-            "offset and search_after are mutually exclusive (the cursor "
-            "IS the page position — ES rejects from + search_after too)"
-        )
-    sa_map = None
-    if search_after is not None:
-        sa_map = {int(q): (float(s), int(d))
-                  for q, (s, d) in search_after.items()}
-    mm_map = None
-    if min_should_match is not None:
-        if conjunctive:
-            raise ValueError(
-                "min_should_match and conjunctive are mutually exclusive "
-                "(conjunctive IS min_should_match = the term count)"
-            )
-        mm_vals = (min_should_match.values()
-                   if isinstance(min_should_match, dict)
-                   else [min_should_match])
-        if any(int(v) < 1 for v in mm_vals):
-            raise ValueError(
-                f"min_should_match must be >= 1, got {min_should_match}"
-            )
-        if isinstance(min_should_match, dict):
-            mm_map = {qid: int(min_should_match[qid]) for qid, _ in rows
-                      if qid in min_should_match}
-        else:
-            mm_map = {qid: int(min_should_match) for qid, _ in rows}
-    n_docs_total = sum(int(s.manifest["n_docs"]) for s in shards)
-    k_top = (k + offset) if not exhaustive else max(k + offset, n_docs_total)
-    scorer = _wand_scorer(
-        k_top,
-        params,
-        round_dp,
-        idf_map,
-        decoders=decoders if decoders else None,
-        qweights=term_weights,
-        require_all=require_all,
-        min_match=mm_map,
-        exclude_terms=ex_map,
-        search_after=sa_map,
-        demote_terms=dem_map,
-        demote_keep=dem_keep,
-        demote_factor=float(negative_boost),
-    )
-    if gather == "single":
-        out = matched.groupBy("query_id").applyInPandas(scorer, schema=_TOPK_SCHEMA)
-        if exhaustive:
-            out = out.filter(F.col("rank") <= k + offset)
-        if offset:
-            # page [offset, offset+k) with ABSOLUTE ranks (ES from/size)
-            out = out.filter(F.col("rank") > offset)
-        return out
-
-    # two-phase: shard-local top-k in parallel (the scorer is unchanged —
-    # a (query_id, doc_base) group holds exactly one shard's chunks, and
-    # decoded ids are already federation-global), then a per-query merge
-    # of the <= k_top-per-shard candidates (bounded input: k x |shards|)
-    shard_topk = matched.groupBy("query_id", "doc_base").applyInPandas(
-        scorer, schema=_TOPK_SCHEMA
-    )
-    out = _merge_shard_topk(shard_topk, k_top if exhaustive else k + offset)
-    if exhaustive:
-        out = out.filter(F.col("rank") <= k + offset)
-    if offset:
-        out = out.filter(F.col("rank") > offset)
-    return out
 
 
 def bm25_scores_federated(
@@ -652,104 +399,58 @@ def bm25_scores_federated(
     shard (federation chunk ids are disjoint per shard, so the group's
     doc_base is constant). Feeds group-aware consumers — federated
     field collapse (query/collapse.py)."""
-    from .wand import _SCORES_SCHEMA, _flat_scorer
-
-    _check_compat(shards)
-    spark = shards[0].spark
-    chunk_docs = int(shards[0].manifest["chunk_docs"])
-    params = shards[0].params
-
-    rows = []
-    if query_terms is not None:
-        # pre-tokenized unique term lists (the dis_max/PRF seam)
-        for qid, terms in enumerate(query_terms):
-            for t in dict.fromkeys(terms):
-                rows.append((qid, t))
-    else:
-        for qid, q in enumerate(queries):
-            for t in dict.fromkeys(tokenize_text(q, cfg)):
-                rows.append((qid, t))
-    if not rows:
-        return spark.createDataFrame([], _SCORES_SCHEMA)
-    all_terms = sorted({t for _, t in rows})
-    idf_map = _global_idf(shards, all_terms)
-
-    require_all = None
-    if conjunctive:
-        n_req: dict[int, int] = {}
-        dead: set[int] = set()
-        for qid, t in rows:
-            n_req[qid] = n_req.get(qid, 0) + 1
-            if t not in idf_map:
-                dead.add(qid)
-        rows = [(qid, t) for qid, t in rows if qid not in dead]
-        if not rows:
-            return spark.createDataFrame([], _SCORES_SCHEMA)
-        require_all = {q: n for q, n in n_req.items() if q not in dead}
-        all_terms = sorted({t for _, t in rows})
-
-    ex_map: dict[int, set] | None = None
-    ex_rows: list = []
-    if exclude_terms:
-        live = {qid for qid, _ in rows}
-        ex_map = {
-            int(qid): set(ts)
-            for qid, ts in exclude_terms.items()
-            if ts and int(qid) in live
-        } or None
-    if ex_map:
-        ex_t = sorted({t for s in ex_map.values() for t in s})
-        new = [t for t in ex_t if t not in idf_map]
-        if new:
-            idf_map.update(_global_idf(shards, new))
-        ex_rows = [
-            (qid, t)
-            for qid, s in sorted(ex_map.items())
-            for t in sorted(s)
-            if t in idf_map
-        ]
-        all_terms = sorted(set(all_terms) | {t for _, t in ex_rows})
-
-    bases = _doc_bases(shards)
-    parts = []
-    for s, base in zip(shards, bases):
-        parts.append(
-            s.index.filter(F.col("term").isin(all_terms)).select(
-                "term",
-                (F.col("chunk") + F.lit(base // chunk_docs)).alias("chunk"),
-                "postings",
-                F.lit(base).cast("long").alias("doc_base"),
-            )
-        )
-    pruned = reduce(DataFrame.unionByName, parts)
-
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, t in rows:
-        qids_by_term.setdefault(t, []).append(qid)
-    for qid, t in ex_rows:
-        if qid not in qids_by_term.setdefault(t, []):
-            qids_by_term[t].append(qid)
-    map_entries = [
-        x
-        for t, qs in qids_by_term.items()
-        if t in idf_map
-        for x in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
-    ]
-    if not map_entries:
-        return spark.createDataFrame([], _SCORES_SCHEMA)
-    matched = pruned.withColumn(
-        "query_id", F.explode(F.create_map(*map_entries)[F.col("term")])
+    return _bm25_scores(
+        shards, queries, cfg, round_dp=round_dp, conjunctive=conjunctive,
+        exclude_terms=exclude_terms, min_should_match=min_should_match,
+        query_terms=query_terms,
     )
-    decoders: dict[int, object] = {}
-    for s, base in zip(shards, bases):
-        mask = s.delete_mask()
-        if mask is not None:
-            decoders[base] = mask.wrap_decoders()[0]
-    mm_map = None
+
+
+@dataclass
+class _Bm25Plan:
+    """A prepared BM25 request: the matched chunk rows fanned out to
+    their query ids, plus the per-query maps the scorers read."""
+
+    matched: DataFrame
+    idf_map: dict
+    require_all: dict | None
+    min_match: dict | None
+    exclude_terms: dict | None
+    demote_terms: dict | None
+    demote_keep: dict | None
+    decoders: dict | None
+
+
+def _bm25_plan(
+    shards: Sequence[PackedIndex],
+    queries: Sequence[str],
+    cfg: TokenizerConfig,
+    query_terms=None,
+    fuzzy: bool = False,
+    conjunctive: bool = False,
+    exclude_terms: dict | None = None,
+    min_should_match=None,
+    demote_terms: dict | None = None,
+    idf_override: dict | None = None,
+    doc_filters=None,
+    doc_boosts=None,
+) -> _Bm25Plan | None:
+    """Request preparation shared by the top-k and score-all BM25 plans;
+    None when no query can match anything.
+
+    Plan shape (join-free): idf for the bounded query-term set is
+    collected once and shipped in the scorer closure; each shard's index
+    is scanned with a pushed-down ``In(term, …)`` (the term-sorted
+    layout prunes row groups by min/max stats — the reference's
+    sorted-file binary search, index.py:93-131, done by the scan), the
+    scans UNION at plan level, and a literal term -> query_ids map
+    projection fans the chunk rows out. The caller's groupBy into its
+    scorer is then the only exchange."""
     if min_should_match is not None:
         if conjunctive:
             raise ValueError(
-                "min_should_match and conjunctive are mutually exclusive"
+                "min_should_match and conjunctive are mutually exclusive "
+                "(conjunctive IS min_should_match = the term count)"
             )
         mm_vals = (min_should_match.values()
                    if isinstance(min_should_match, dict)
@@ -758,16 +459,288 @@ def bm25_scores_federated(
             raise ValueError(
                 f"min_should_match must be >= 1, got {min_should_match}"
             )
+    for name, frames in (("doc_filters", doc_filters), ("doc_boosts", doc_boosts)):
+        if frames is not None and len(frames) != len(shards):
+            raise ValueError(
+                f"{name} has {len(frames)} frames for {len(shards)} shards "
+                "— build one per shard"
+            )
+    # unique terms per query: multiplicity ignored (bm25.py:44-53 quirk);
+    # ``query_terms`` is the pre-tokenized PRF/MLT/dis_max seam
+    term_lists = (query_terms if query_terms is not None
+                  else [tokenize_text(q, cfg) for q in queries])
+    rows = [(qid, t) for qid, ts in enumerate(term_lists)
+            for t in dict.fromkeys(ts)]
+    if not rows:
+        return None
+    if idf_override is not None:
+        # caller-supplied statistics (the cross_fields blended-idf seam,
+        # query/multimatch.py): terms absent from the map score nothing
+        idf_map = {t: float(v) for t, v in idf_override.items()}
+    else:
+        idf_map = _global_idf(shards, sorted({t for _, t in rows}))
+
+    # the idf collect doubles as the vocabulary probe: correct ONLY the
+    # missing terms (a fully in-vocab batch pays no correction job at all
+    # — exact hits map to themselves by the exact-first ranking anyway)
+    oov = sorted({t for _, t in rows if t not in idf_map})
+    if fuzzy and oov:
+        from .fuzzy import correct_terms
+
+        corr = correct_terms(_global_dictionary(shards), oov)
+        if corr:
+            # re-dedupe per query: two typos may correct to the same term,
+            # and a duplicate (qid, term) would double-score via the fan-out
+            rows = list(dict.fromkeys((qid, corr.get(t, t)) for qid, t in rows))
+            idf_map.update(
+                _global_idf(shards, sorted(set(corr.values()) - set(idf_map))))
+
+    require_all = None
+    if conjunctive:
+        # per-query unique-term requirement; a query with a term absent
+        # from every shard matches nothing -> drop its rows (and so its map
+        # entries). A doc lives in one shard and one chunk, so the
+        # scorer's per-group coverage count is the global one.
+        n_req = Counter(qid for qid, _ in rows)
+        dead = {qid for qid, t in rows if t not in idf_map}
+        rows = [(qid, t) for qid, t in rows if qid not in dead]
+        if not rows:
+            return None
+        require_all = {q: n for q, n in n_req.items() if q not in dead}
+    live = {qid for qid, _ in rows}
+
+    min_match = None
+    if min_should_match is not None:
         if isinstance(min_should_match, dict):
-            mm_map = {qid: int(min_should_match[qid]) for qid, _ in rows
-                      if qid in min_should_match}
+            min_match = {q: int(min_should_match[q]) for q in live
+                         if q in min_should_match}
         else:
-            mm_map = {qid: int(min_should_match) for qid, _ in rows}
-    scorer = _flat_scorer(params, round_dp, idf_map,
-                          require_all=require_all, min_match=mm_map,
-                          exclude_terms=ex_map,
-                          decoders=decoders if decoders else None)
-    return matched.groupBy("query_id", "chunk").applyInPandas(
+            min_match = {q: int(min_should_match) for q in live}
+
+    def side_terms(by_q):
+        """Negated or demote terms of the live queries, and their fan-out
+        rows; absent-from-index terms exclude or demote nothing, so their
+        idf probe doubles as a presence probe."""
+        side = {int(q): set(ts) for q, ts in (by_q or {}).items()
+                if ts and int(q) in live}
+        if not side:
+            return None, []
+        idf_map.update(_global_idf(
+            shards, sorted({t for ts in side.values() for t in ts} - set(idf_map))))
+        return side, [(q, t) for q, ts in sorted(side.items())
+                      for t in sorted(ts) if t in idf_map]
+
+    ex_map, ex_rows = side_terms(exclude_terms)
+    dem_map, dem_rows = side_terms(demote_terms)
+    dem_keep = None
+    if dem_map:
+        # demote terms that are ALSO positive keep their rows in the
+        # scoring frame: one row, both roles (the ES boosting semantics)
+        pos_by_q: dict[int, set] = {}
+        for qid, t in rows:
+            pos_by_q.setdefault(qid, set()).add(t)
+        dem_keep = {q: ts & pos_by_q.get(q, set()) for q, ts in dem_map.items()}
+
+    qids_by_term: dict[str, list[int]] = {}
+    for qid, t in rows + ex_rows + dem_rows:
+        # negated and demote rows ride the same fan-out; a term both
+        # positive and negated/demoted for one query keeps ONE row, which
+        # the scorer's term-set split routes to each of its roles
+        qs = qids_by_term.setdefault(t, [])
+        if qid not in qs:
+            qs.append(qid)
+    map_entries = [
+        x
+        for t, qs in qids_by_term.items()
+        if t in idf_map  # terms absent from every shard match nothing (OR)
+        for x in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
+    ]
+    if not map_entries:
+        return None
+
+    all_terms = sorted(qids_by_term)
+    chunk_docs = int(shards[0].manifest["chunk_docs"])
+    bases = _doc_bases(shards)
+    pruned = reduce(DataFrame.unionByName, [
+        s.index.filter(F.col("term").isin(all_terms)).select(
+            "term",
+            (F.col("chunk") + F.lit(base // chunk_docs)).alias("chunk"),
+            "max_tfsat",
+            "postings",
+            F.lit(base).cast("long").alias("doc_base"),
+        )
+        for s, base in zip(shards, bases)
+    ])
+    matched = pruned.withColumn(
+        "query_id", F.explode(F.create_map(*map_entries)[F.col("term")])
+    )
+    if doc_filters is not None:
+        allowed = reduce(DataFrame.unionByName, [
+            _allowed_by_chunk(shards[0], f.select(_shift(base)))
+            for f, base in zip(doc_filters, bases)
+        ])
+        # inner join: chunks whose allowed-set is empty vanish before decode
+        matched = matched.join(allowed, "chunk")
+    if doc_boosts is not None:
+        boosts = reduce(DataFrame.unionByName, [
+            _boost_by_chunk(shards[0], f.select(_shift(base), "boost"))
+            for f, base in zip(doc_boosts, bases)
+        ])
+        # LEFT join: chunks without boosted docs keep default 1.0 boosts
+        matched = matched.join(boosts, "chunk", "left")
+
+    # tombstones mask at decode (indexing/deletes.py) through per-base
+    # decode hooks; chunk upper bounds stay valid over any doc subset
+    decoders = {
+        base: s.delete_mask().wrap_decoders()[0]
+        for s, base in zip(shards, bases)
+        if s.delete_mask() is not None
+    }
+    return _Bm25Plan(matched, idf_map, require_all, min_match, ex_map,
+                     dem_map, dem_keep, decoders or None)
+
+
+def _bm25_topk(
+    shards: Sequence[PackedIndex],
+    queries: Sequence[str],
+    cfg: TokenizerConfig,
+    k: int = 10,
+    params: Bm25Params | None = None,
+    exhaustive: bool = False,
+    round_dp: int | None = None,
+    gather: str = "auto",
+    fuzzy: bool = False,
+    conjunctive: bool = False,
+    doc_filters=None,
+    doc_boosts=None,
+    query_terms=None,
+    term_weights: dict | None = None,
+    exclude_terms: dict | None = None,
+    offset: int = 0,
+    search_after: dict | None = None,
+    min_should_match=None,
+    demote_terms: dict | None = None,
+    negative_boost: float = 0.5,
+) -> DataFrame:
+    """The one distributed BM25 top-k plan: :func:`bm25_topk_federated`
+    over N shards and ``bm25_topk_packed_batch`` over one."""
+    if offset < 0:
+        raise ValueError(f"offset must be >= 0, got {offset}")
+    if search_after is not None and offset:
+        raise ValueError(
+            "offset and search_after are mutually exclusive (the cursor "
+            "IS the page position — ES rejects from + search_after too)"
+        )
+    if demote_terms is not None:
+        if not 0.0 <= float(negative_boost) < 1.0:
+            raise ValueError(
+                f"negative_boost must be in [0, 1), got {negative_boost} "
+                "(1.0 is a no-op; >1 would promote and break pruning)"
+            )
+        if exclude_terms:
+            for qid, ts in demote_terms.items():
+                both = set(ts or ()) & set(exclude_terms.get(qid, ()) or ())
+                if both:
+                    raise ValueError(
+                        f"terms {sorted(both)} are both demoted and "
+                        f"excluded for query {qid} — pick one (exclusion "
+                        "removes, demotion sinks)"
+                    )
+    if fuzzy and term_weights:
+        raise ValueError(
+            "fuzzy OOV rewriting would orphan term_weights keys — "
+            "correct the terms first, then pass weights on the final terms"
+        )
+    if gather == "auto":
+        gather = "single" if len(shards) <= AUTO_GATHER_SINGLE_MAX else "two_phase"
+    if gather not in ("two_phase", "single"):
+        raise ValueError(
+            f"gather must be 'auto', 'two_phase' or 'single', got {gather!r}"
+        )
+    _check_compat(shards)
+    built = shards[0].params
+    params = params or built
+    if (float(params.k), float(params.b)) != (float(built.k), float(built.b)) and not exhaustive:
+        raise ValueError(
+            f"query params k={params.k} b={params.b} differ from build-time "
+            f"k={built.k} b={built.b}: stored block-max bounds are invalid for "
+            "them — pass exhaustive=True (no pruning) or rebuild the index"
+        )
+    plan = _bm25_plan(
+        shards, queries, cfg, query_terms=query_terms, fuzzy=fuzzy,
+        conjunctive=conjunctive, exclude_terms=exclude_terms,
+        min_should_match=min_should_match, demote_terms=demote_terms,
+        doc_filters=doc_filters, doc_boosts=doc_boosts,
+    )
+    if plan is None:
+        return shards[0].spark.createDataFrame([], _TOPK_SCHEMA)
+    sa_map = None
+    if search_after is not None:
+        sa_map = {int(q): (float(s), int(d))
+                  for q, (s, d) in search_after.items()}
+    n_docs_total = sum(int(s.manifest["n_docs"]) for s in shards)
+    k_top = (k + offset) if not exhaustive else max(k + offset, n_docs_total)
+    scorer = _wand_scorer(
+        k_top,
+        params,
+        round_dp,
+        plan.idf_map,
+        decoders=plan.decoders,
+        qweights=term_weights,
+        require_all=plan.require_all,
+        min_match=plan.min_match,
+        exclude_terms=plan.exclude_terms,
+        search_after=sa_map,
+        demote_terms=plan.demote_terms,
+        demote_keep=plan.demote_keep,
+        demote_factor=float(negative_boost),
+    )
+    if gather == "single":
+        out = plan.matched.groupBy("query_id").applyInPandas(
+            scorer, schema=_TOPK_SCHEMA)
+    else:
+        # two-phase: shard-local top-k in parallel (a (query_id, doc_base)
+        # group holds exactly one shard's chunks, and decoded ids are
+        # already federation-global), then a per-query merge of the
+        # <= k_top-per-shard candidates (bounded input: k x |shards|)
+        shard_topk = plan.matched.groupBy("query_id", "doc_base").applyInPandas(
+            scorer, schema=_TOPK_SCHEMA)
+        out = _merge_shard_topk(shard_topk, k_top if exhaustive else k + offset)
+    if exhaustive:
+        out = out.filter(F.col("rank") <= k + offset)
+    if offset:
+        # page [offset, offset+k): ranks stay ABSOLUTE (ES from/size)
+        out = out.filter(F.col("rank") > offset)
+    return out
+
+
+def _bm25_scores(
+    shards: Sequence[PackedIndex],
+    queries: Sequence[str],
+    cfg: TokenizerConfig,
+    round_dp: int | None = None,
+    conjunctive: bool = False,
+    exclude_terms: dict | None = None,
+    query_terms=None,
+    min_should_match=None,
+    idf_override: dict | None = None,
+) -> DataFrame:
+    """The one distributed BM25 score-all plan: :func:`bm25_scores_federated`
+    over N shards and ``bm25_scores_packed_batch`` over one."""
+    _check_compat(shards)
+    plan = _bm25_plan(
+        shards, queries, cfg, query_terms=query_terms,
+        conjunctive=conjunctive, exclude_terms=exclude_terms,
+        min_should_match=min_should_match, idf_override=idf_override,
+    )
+    if plan is None:
+        return shards[0].spark.createDataFrame([], _SCORES_SCHEMA)
+    scorer = _flat_scorer(shards[0].params, round_dp, plan.idf_map,
+                          require_all=plan.require_all,
+                          min_match=plan.min_match,
+                          exclude_terms=plan.exclude_terms,
+                          decoders=plan.decoders)
+    return plan.matched.groupBy("query_id", "chunk").applyInPandas(
         scorer, schema=_SCORES_SCHEMA
     )
 
@@ -834,21 +807,15 @@ def tfidf_topk_federated(
         return spark.createDataFrame([], _TOPK_SCHEMA)
     idf_map = _global_idf(shards, sorted({t for _, t in rows}))
 
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = tfidf_topk_packed_batch(
+    cand = _shifted_union(
+        shards,
+        lambda s: tfidf_topk_packed_batch(
             s, queries, cfg, k=k, schema=schema, round_dp=round_dp,
             idf_override=idf_map,
-        )
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "score",
-                "rank",
-            )
-        )
-    return _merge_shard_topk(reduce(DataFrame.unionByName, parts), k)
+        ),
+        ["score", "rank"],
+    )
+    return _merge_shard_topk(cand, k)
 
 
 def proximity_topk_federated(
@@ -904,22 +871,16 @@ def proximity_topk_federated(
             max(float(s.manifest["dl_norm_max"]) for s in shards),
         )
 
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = proximity_topk_packed_batch(
+    cand = _shifted_union(
+        shards,
+        lambda s: proximity_topk_packed_batch(
             s, queries, cfg, k=k, mode=mode, schema=schema,
             round_dp=round_dp, rerank_n=rerank_n,
             idf_override=idf_map, dl_bounds=dl_bounds,
-        )
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "score",
-                "rank",
-            )
-        )
-    return _merge_shard_topk(reduce(DataFrame.unionByName, parts), k)
+        ),
+        ["score", "rank"],
+    )
+    return _merge_shard_topk(cand, k)
 
 
 def boolean_search_federated(
@@ -950,34 +911,12 @@ def boolean_search_federated(
     from .wand import boolean_search_packed
 
     _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = boolean_search_packed(s, queries, cfg, op=op,
-                                      exclude_terms=exclude_terms,
-                                      query_terms=query_terms)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                *(["n_terms"] if op == "or" else []),
-            )
-        )
-    return reduce(DataFrame.unionByName, parts)
-
-
-def _global_term_stats(shards: Sequence[PackedIndex]) -> DataFrame:
-    """(term, idf) over the federation: df summed across disjoint shards,
-    the build's own idf expression — the DataFrame twin of
-    :func:`_global_idf` for joins against unbounded term sets (expansion
-    weighting). Vocabulary-sized (one union-scan of the sidecars)."""
-    n_live = sum(
-        int(s.manifest.get("n_docs_live", s.manifest["n_docs"])) for s in shards
-    )
-    return _global_dictionary(shards).select(
-        "term",
-        F.round(
-            F.log(F.lit(float(max(n_live, 1))) / F.col("df")), 3
-        ).alias("idf"),
+    return _shifted_union(
+        shards,
+        lambda s: boolean_search_packed(s, queries, cfg, op=op,
+                                        exclude_terms=exclude_terms,
+                                        query_terms=query_terms),
+        ["n_terms"] if op == "or" else [],
     )
 
 
@@ -1113,6 +1052,32 @@ def more_like_this_federated(
     )
 
 
+def _doc_local_cfg(shards: Sequence[PackedIndex], cfg):
+    """Compat check + tokenizer default for the doc-local rankers."""
+    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
+    return cfg or TokenizerConfig.from_manifest(
+        shards[0].manifest.get("tokenizer", {})
+    )
+
+
+def _doc_local_topk(shards, local_fn, cols, order, k) -> DataFrame:
+    """Shared merge for the doc-local rankers (phrase, spans, intervals):
+    positions are doc-local and every ranking metric is an integer
+    computed inside one doc, so per-shard results are exact on ANY corpus,
+    and a per-shard top-k cut is loss-free under (``order``, doc_id asc) —
+    the base shift is monotone, so shard-local order is the global order
+    restricted to the shard (the two-phase BM25 dominance argument). One
+    window over the k x |shards| candidates re-ranks."""
+    from pyspark.sql import Window
+
+    cand = _shifted_union(shards, local_fn, cols)
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("doc_id"))
+    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
+    if k is not None:
+        ranked = ranked.filter(F.col("rank") <= k)
+    return ranked
+
+
 def phrase_topk_federated(
     shards: Sequence[PackedIndex],
     phrases: Sequence[str],
@@ -1123,38 +1088,14 @@ def phrase_topk_federated(
     """Federated exact-phrase retrieval -> federation-global (query_id,
     doc_id, n_occurrences, first_pos, rank). Phrase matching is purely
     doc-local (positions within one doc, integer outputs, no corpus
-    statistics), so per-shard :func:`phrase_topk_packed_batch` results are
-    exact on ANY corpus; the per-shard top-k cut is safe under the global
-    (n_occurrences desc, doc_id asc) order (same dominance argument as the
-    two-phase BM25 gather), and one tiny window over the k x |shards|
-    candidates re-ranks."""
-    from pyspark.sql import Window
-
+    statistics), so per-shard :func:`phrase_topk_packed_batch` results
+    merge exactly under (n_occurrences desc, doc_id asc)."""
     from .phrase import phrase_topk_packed_batch
 
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = phrase_topk_packed_batch(s, phrases, cfg, k=k, slop=slop)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "n_occurrences",
-                "first_pos",
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_occurrences"), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards, lambda s: phrase_topk_packed_batch(s, phrases, cfg, k=k, slop=slop),
+        ["n_occurrences", "first_pos"], F.desc("n_occurrences"), k)
 
 
 def minspan_topk_federated(
@@ -1167,34 +1108,12 @@ def minspan_topk_federated(
     (query_id, doc_id, span_len, lo, hi, rank). Like phrase search the
     span is doc-local and integer-exact, so federation is exact on ANY
     corpus; per-shard cuts are safe under (span_len asc, doc_id asc)."""
-    from pyspark.sql import Window
-
     from .spans import minspan_topk_packed_batch
 
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = minspan_topk_packed_batch(s, queries, cfg, k=k)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "span_len",
-                "lo",
-                "hi",
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("span_len"), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards, lambda s: minspan_topk_packed_batch(s, queries, cfg, k=k),
+        ["span_len", "lo", "hi"], F.asc("span_len"), k)
 
 
 def span_first_topk_federated(
@@ -1208,33 +1127,12 @@ def span_first_topk_federated(
     integer-exact, so federation is exact on ANY corpus (the
     phrase/minspan argument); per-shard cuts are safe under
     (first_pos asc, doc_id asc)."""
-    from pyspark.sql import Window
-
     from .spanqueries import span_first_topk_packed_batch
 
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = span_first_topk_packed_batch(s, queries, cfg, k=k)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "n_within",
-                "first_pos",
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("first_pos"), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards, lambda s: span_first_topk_packed_batch(s, queries, cfg, k=k),
+        ["n_within", "first_pos"], F.asc("first_pos"), k)
 
 
 def span_not_topk_federated(
@@ -1248,67 +1146,14 @@ def span_not_topk_federated(
     """Federated span_not -> federation-global (query_id, doc_id,
     n_clear, first_clear, rank); per-shard cuts safe under
     (n_clear desc, doc_id asc) — same doc-local argument."""
-    from pyspark.sql import Window
-
     from .spanqueries import span_not_topk_packed_batch
 
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = span_not_topk_packed_batch(
-            s, queries, cfg, pre=pre, post=post, k=k)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "n_clear",
-                "first_clear",
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_clear"), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
-
-
-def _span_abc_federated(shards, queries, cfg, k, packed_fn, metric, first_col):
-    """Shared federated merge for the 3-term span queries (within /
-    containing): doc-local integer metrics + base-shifted doc ids make
-    per-shard top-k cuts loss-free under the (metric desc, doc asc)
-    total order (base shift is monotone, so shard-local order == global
-    order restricted to the shard)."""
-    from pyspark.sql import Window
-
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = packed_fn(s, queries, cfg, k=k)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                metric,
-                first_col,
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc(metric), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards,
+        lambda s: span_not_topk_packed_batch(
+            s, queries, cfg, pre=pre, post=post, k=k),
+        ["n_clear", "first_clear"], F.desc("n_clear"), k)
 
 
 def span_within_topk_federated(
@@ -1322,9 +1167,10 @@ def span_within_topk_federated(
     argument (doc-local positions, integer ranking)."""
     from .spanqueries import span_within_topk_packed_batch
 
-    return _span_abc_federated(
-        shards, queries, cfg, k, span_within_topk_packed_batch,
-        "n_within", "first_within")
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards, lambda s: span_within_topk_packed_batch(s, queries, cfg, k=k),
+        ["n_within", "first_within"], F.desc("n_within"), k)
 
 
 def span_containing_topk_federated(
@@ -1337,9 +1183,10 @@ def span_containing_topk_federated(
     doc_id, n_containing, first_pos, rank)."""
     from .spanqueries import span_containing_topk_packed_batch
 
-    return _span_abc_federated(
-        shards, queries, cfg, k, span_containing_topk_packed_batch,
-        "n_containing", "first_pos")
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards, lambda s: span_containing_topk_packed_batch(s, queries, cfg, k=k),
+        ["n_containing", "first_pos"], F.desc("n_containing"), k)
 
 
 def resolve_docs_federated(
@@ -1350,15 +1197,10 @@ def resolve_docs_federated(
     (plan-level, no exchange), and joins the top-k — the multi-shard twin
     of :func:`~searchengine_spark.query.wand.resolve_docs`."""
     ext_cols = [c for c in shards[0].manifest["order_cols"] if c != "doc_id"]
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        parts.append(
-            s.docmap.select(
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                *ext_cols,
-            )
-        )
-    docmap = reduce(DataFrame.unionByName, parts)
+    docmap = reduce(DataFrame.unionByName, [
+        s.docmap.select(_shift(base), *ext_cols)
+        for s, base in zip(shards, _doc_bases(shards))
+    ])
     return topk.join(docmap, "doc_id").select(
         "query_id", "doc_id", *ext_cols, "score", "rank"
     )
@@ -1379,39 +1221,18 @@ def phrase_prefix_topk_federated(
     multi-term-slot phrase and the candidates merge like
     :func:`phrase_topk_federated` (doc-local integer semantics, safe
     per-shard top-k cut)."""
-    from pyspark.sql import Window
-
     from .phrase import _packed_slots_topk, _prefix_patterns, phrase_prefix_slots
     from .wildcard import expand_patterns
 
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
+    cfg = _doc_local_cfg(shards, cfg)
     exp = expand_patterns(
         _global_dictionary(shards), _prefix_patterns(phrases),
         max_expansions=max_expansions,
     )
     slots = phrase_prefix_slots(phrases, cfg, exp)
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = _packed_slots_topk(s, slots, k, slop=slop)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "n_occurrences",
-                "first_pos",
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_occurrences"), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
+    return _doc_local_topk(
+        shards, lambda s: _packed_slots_topk(s, slots, k, slop=slop),
+        ["n_occurrences", "first_pos"], F.desc("n_occurrences"), k)
 
 
 def intervals_topk_federated(
@@ -1427,33 +1248,14 @@ def intervals_topk_federated(
     integer minimal-interval count, so scatter-gather is EXACT on any
     corpus (the span-family argument: a doc lives in exactly one
     shard); per-shard k-cuts are safe under (count desc, doc_id asc)."""
-    from pyspark.sql import Window
-
     from .intervals import intervals_topk_packed_batch
 
-    _check_compat(shards, keys=_BOOL_COMPAT_KEYS, payload_freq=False)
-    cfg = cfg or TokenizerConfig.from_manifest(
-        shards[0].manifest.get("tokenizer", {})
-    )
-    parts = []
-    for s, base in zip(shards, _doc_bases(shards)):
-        local = intervals_topk_packed_batch(
-            s, queries, cfg, ordered=ordered, max_gaps=max_gaps, k=k)
-        parts.append(
-            local.select(
-                "query_id",
-                (F.col("doc_id") + F.lit(base)).cast("long").alias("doc_id"),
-                "n_intervals",
-            )
-        )
-    cand = reduce(DataFrame.unionByName, parts)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("n_intervals"), F.asc("doc_id")
-    )
-    ranked = cand.withColumn("rank", F.row_number().over(w).cast("long"))
-    if k is not None:
-        ranked = ranked.filter(F.col("rank") <= k)
-    return ranked
+    cfg = _doc_local_cfg(shards, cfg)
+    return _doc_local_topk(
+        shards,
+        lambda s: intervals_topk_packed_batch(
+            s, queries, cfg, ordered=ordered, max_gaps=max_gaps, k=k),
+        ["n_intervals"], F.desc("n_intervals"), k)
 
 
 def constant_score_topk_federated(

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..indexing import fsio
+from ..indexing.build import idf_col
 from ..indexing.packed import PackedIndex, build_packed_index, load_packed_index
 from .bm25 import Bm25Params
 from ..tokenizer import TokenizerConfig
@@ -373,12 +374,7 @@ def combined_fields_topk(
         dfu = dfu.unionByName(p)
     idfc = (
         dfu.groupBy("term").agg(F.max("df").alias("dfm"))
-        .select(
-            "term",
-            F.round(
-                F.log(F.lit(float(n_docs)) / F.col("dfm").cast("double")), 3
-            ).alias("idf"),
-        )
+        .select("term", idf_col(n_docs, "dfm").alias("idf"))
     )
 
     # merged tf': sum_f w_f * tf_f per (term, doc)

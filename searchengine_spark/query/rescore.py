@@ -23,8 +23,12 @@ the same bound ES's rescorer has). One extra exchange total.
 Float discipline (the cross-engine oracle contract): primary scores
 arrive 6dp-rounded from the WAND tier; the secondary score-all is
 rounded to the same ``round_dp`` BEFORE the combine, and the combined
-score re-rounds — products/sums of rounded inputs, stable on any IEEE
-engine; ``avg`` divides by 2, which is exact in binary.
+score re-rounds with Spark's ``F.round`` — HALF_UP on the shortest
+decimal repr of the double (the idf/dl_norm policy; serve._round3_up is
+its Python twin). A weight that is not dyadic (0.7) makes qw·p land on a
+decimal tie like 2.0655845, where HALF_UP and a binary-value rounder
+(``np.round`` gives 2.065584) disagree, so an oracle must round the way
+``F.round`` does; ``avg`` divides by 2, which is exact in binary.
 
 No reference counterpart; semantics follow the Elasticsearch rescore
 API (rescore_query + query_weight/rescore_query_weight/score_mode).

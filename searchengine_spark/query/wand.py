@@ -21,6 +21,12 @@ shipped in the scorer closure, then one applyInPandas. The only shuffle is
 the groupBy(query_id) hash exchange of matched chunks; a query batch is
 ONE job (plus the tiny pruned idf collect).
 
+A single index is served as a one-shard federation: bm25_topk_packed_batch
+and bm25_scores_packed_batch build the plan above through
+query/federated.py on ``[pidx]`` (doc base 0, the stored idf read as is),
+so there is one distributed BM25 plan. This module keeps the scorers it
+runs, the per-chunk filter/boost arrays and the single-index helpers.
+
 Safety is gated by tests/test_packed_wand.py: WAND top-k == exhaustive
 top-k (same docs, same scores) on every fixture query.
 """
@@ -28,7 +34,7 @@ top-k (same docs, same scores) on every fixture query.
 from __future__ import annotations
 
 import heapq
-from typing import List, Sequence
+from typing import Sequence
 
 import numpy as np
 import pandas as pd
@@ -404,7 +410,6 @@ def _flat_scorer(
     params: Bm25Params,
     round_dp: int | None = None,
     idf_map: dict | None = None,
-    decode=None,
     require_all: dict | None = None,
     min_match: dict | None = None,
     exclude_terms: dict | None = None,
@@ -426,7 +431,9 @@ def _flat_scorer(
     shard's own tombstone-masked decoder decodes, and decoded ids shift
     by the base into the federation namespace."""
     kk, bb = float(params.k), float(params.b)
-    dec = decode or (lambda buf: decode_postings(bytes(buf)))
+
+    def dec(buf):
+        return decode_postings(bytes(buf))
 
     def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -526,114 +533,14 @@ def bm25_scores_packed_batch(
             f"payload={pidx.manifest.get('payload')!r} index stores no dlq — "
             "BM25 needs a payload='freq' build"
         )
-    spark = pidx.spark
-    rows = []
-    if query_terms is not None:
-        for qid, terms in enumerate(query_terms):
-            for t in dict.fromkeys(terms):
-                rows.append((qid, t))
-    else:
-        for qid, q in enumerate(queries):
-            for t in dict.fromkeys(tokenize_text(q, cfg)):
-                rows.append((qid, t))
-    if not rows:
-        return spark.createDataFrame([], _SCORES_SCHEMA)
-    all_terms = sorted({t for _, t in rows})
-    if idf_override is not None:
-        # caller-supplied statistics (the cross_fields blended-idf seam,
-        # query/multimatch.py): terms absent from the map score nothing
-        idf_map = {t: float(v) for t, v in idf_override.items()}
-    else:
-        stats = pidx.term_stats.select("term", "idf").filter(
-            F.col("term").isin(all_terms)
-        )
-        idf_map = {r["term"]: float(r["idf"]) for r in stats.collect()}
+    from .federated import _bm25_scores
 
-    require_all = None
-    if conjunctive:
-        n_req: dict[int, int] = {}
-        dead: set[int] = set()
-        for qid, t in rows:
-            n_req[qid] = n_req.get(qid, 0) + 1
-            if t not in idf_map:
-                dead.add(qid)
-        rows = [(qid, t) for qid, t in rows if qid not in dead]
-        if not rows:
-            return spark.createDataFrame([], _SCORES_SCHEMA)
-        require_all = {q: n for q, n in n_req.items() if q not in dead}
-        all_terms = sorted({t for _, t in rows})
-
-    ex_map: dict[int, set] | None = None
-    ex_rows: list = []
-    if exclude_terms:
-        live = {qid for qid, _ in rows}
-        ex_map = {
-            int(qid): set(ts)
-            for qid, ts in exclude_terms.items()
-            if ts and int(qid) in live
-        } or None
-    if ex_map:
-        ex_t = sorted({t for s in ex_map.values() for t in s})
-        new = [t for t in ex_t if t not in idf_map]
-        if new:
-            probe = pidx.term_stats.select("term", "idf").filter(
-                F.col("term").isin(new)
-            )
-            idf_map.update(
-                {r["term"]: float(r["idf"]) for r in probe.collect()}
-            )
-        ex_rows = [
-            (qid, t)
-            for qid, s in sorted(ex_map.items())
-            for t in sorted(s)
-            if t in idf_map
-        ]
-        all_terms = sorted(set(all_terms) | {t for _, t in ex_rows})
-
-    pruned = pidx.index.filter(F.col("term").isin(all_terms))
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, t in rows:
-        qids_by_term.setdefault(t, []).append(qid)
-    for qid, t in ex_rows:
-        if qid not in qids_by_term.setdefault(t, []):
-            qids_by_term[t].append(qid)
-    map_entries = [
-        x
-        for t, qs in qids_by_term.items()
-        if t in idf_map
-        for x in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
-    ]
-    if not map_entries:
-        return spark.createDataFrame([], _SCORES_SCHEMA)
-    matched = pruned.withColumn(
-        "query_id", F.explode(F.create_map(*map_entries)[F.col("term")])
+    return _bm25_scores(
+        [pidx], queries, cfg, round_dp=round_dp, conjunctive=conjunctive,
+        exclude_terms=exclude_terms, query_terms=query_terms,
+        min_should_match=min_should_match, idf_override=idf_override,
     )
-    mask = pidx.delete_mask()
-    dec = mask.wrap_decoders()[0] if mask is not None else None
-    mm_map = None
-    if min_should_match is not None:
-        if conjunctive:
-            raise ValueError(
-                "min_should_match and conjunctive are mutually exclusive"
-            )
-        mm_vals = (min_should_match.values()
-                   if isinstance(min_should_match, dict)
-                   else [min_should_match])
-        if any(int(v) < 1 for v in mm_vals):
-            raise ValueError(
-                f"min_should_match must be >= 1, got {min_should_match}"
-            )
-        if isinstance(min_should_match, dict):
-            mm_map = {qid: int(min_should_match[qid]) for qid, _ in rows
-                      if qid in min_should_match}
-        else:
-            mm_map = {qid: int(min_should_match) for qid, _ in rows}
-    scorer = _flat_scorer(pidx.params, round_dp, idf_map, decode=dec,
-                          require_all=require_all, min_match=mm_map,
-                          exclude_terms=ex_map)
-    return matched.groupBy("query_id", "chunk").applyInPandas(
-        scorer, schema=_SCORES_SCHEMA
-    )
+
 
 
 def filter_doc_ids(pidx: PackedIndex, attrs: DataFrame, predicate) -> DataFrame:
@@ -838,245 +745,25 @@ def bm25_topk_packed_batch(
     query with fewer in-vocabulary terms than m matches nothing (no doc
     can reach the coverage floor). The per-chunk coverage count is
     exact (chunk locality) and subset filtering keeps pruning safe."""
-    if offset < 0:
-        raise ValueError(f"offset must be >= 0, got {offset}")
-    if search_after is not None and offset:
-        raise ValueError(
-            "offset and search_after are mutually exclusive (the cursor "
-            "IS the page position — ES rejects from + search_after too)"
-        )
-    if min_should_match is not None:
-        if conjunctive:
-            raise ValueError(
-                "min_should_match and conjunctive are mutually exclusive "
-                "(conjunctive IS min_should_match = the term count)"
-            )
-        mm_vals = (min_should_match.values()
-                   if isinstance(min_should_match, dict)
-                   else [min_should_match])
-        if any(int(v) < 1 for v in mm_vals):
-            raise ValueError(
-                f"min_should_match must be >= 1, got {min_should_match}"
-            )
-    if demote_terms is not None:
-        if not 0.0 <= float(negative_boost) < 1.0:
-            raise ValueError(
-                f"negative_boost must be in [0, 1), got {negative_boost} "
-                "(1.0 is a no-op; >1 would promote and break pruning)"
-            )
-        if exclude_terms:
-            for qid, ts in demote_terms.items():
-                both = set(ts or ()) & set(exclude_terms.get(qid, ()) or ())
-                if both:
-                    raise ValueError(
-                        f"terms {sorted(both)} are both demoted and "
-                        f"excluded for query {qid} — pick one (exclusion "
-                        "removes, demotion sinks)"
-                    )
     if pidx.manifest.get("payload", "freq") != "freq":
         raise ValueError(
             f"payload={pidx.manifest.get('payload')!r} index stores no dlq — "
             "BM25 needs a payload='freq' build (boolean: use "
             "boolean_search_packed; tfidf: use tfidf_topk_packed_batch)"
         )
-    params = params or pidx.params
-    built = pidx.params
-    if (float(params.k), float(params.b)) != (float(built.k), float(built.b)) and not exhaustive:
-        raise ValueError(
-            f"query params k={params.k} b={params.b} differ from build-time "
-            f"k={built.k} b={built.b}: stored block-max bounds are invalid for "
-            "them — pass exhaustive=True (no pruning) or rebuild the index"
-        )
-    spark = pidx.spark
-    rows = []
-    if query_terms is not None:
-        for qid, terms in enumerate(query_terms):
-            for t in dict.fromkeys(terms):
-                rows.append((qid, t))
-    else:
-        for qid, q in enumerate(queries):
-            # unique terms: query-term multiplicity ignored (bm25.py:44-53 quirk)
-            for t in dict.fromkeys(tokenize_text(q, cfg)):
-                rows.append((qid, t))
-    if not rows:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
+    from .federated import _bm25_topk
 
-    # JOIN-FREE serving: idf for the (bounded) query-term set is collected
-    # once (term-pruned scan of the tiny stats sidecar) and shipped in the
-    # scorer closure; the term -> query_ids fan-out is a literal map
-    # projection. The whole batch is then ONE scan job + ONE hash exchange
-    # — against the broadcast-join formulation this removes two broadcast
-    # jobs per batch, which dominate single-query latency.
-    def _idf_for(terms: list) -> dict:
-        stats = pidx.term_stats.select("term", "idf").filter(
-            F.col("term").isin(terms)
-        )
-        return {r["term"]: float(r["idf"]) for r in stats.collect()}
-
-    if fuzzy and term_weights:
-        raise ValueError(
-            "fuzzy OOV rewriting would orphan term_weights keys — "
-            "correct the terms first, then pass weights on the final terms"
-        )
-    all_terms = sorted({t for _, t in rows})
-    idf_map = _idf_for(all_terms)
-
-    # the idf collect doubles as the vocabulary probe: correct ONLY the
-    # missing terms (a fully in-vocab batch pays no correction job at all
-    # — exact hits map to themselves by the exact-first ranking anyway)
-    oov = [t for t in all_terms if t not in idf_map]
-    if fuzzy and oov:
-        from .fuzzy import correct_terms
-
-        corr = correct_terms(pidx.term_stats, oov)
-        if corr:
-            # re-dedupe per query: two typos may correct to the same term,
-            # and a duplicate (qid, term) would double-score it via the
-            # map fan-out
-            rows = list(dict.fromkeys((qid, corr.get(t, t)) for qid, t in rows))
-            all_terms = sorted({t for _, t in rows})
-            new_terms = sorted(set(corr.values()) - set(idf_map))
-            if new_terms:
-                idf_map.update(_idf_for(new_terms))
-
-    # pre-filter with the literal term set: compiles to a pushed-down
-    # In(term, …) predicate, so the term-sorted parquet layout prunes row
-    # groups via min/max stats — the reference's sorted-file binary search
-    # (index.py:93-131) done by the scan itself
-    require_all = None
-    if conjunctive:
-        # per-query unique-term requirement; a query with an OOV term can
-        # match nothing -> drop its rows (and so its map entries) entirely
-        n_req: dict[int, int] = {}
-        dead: set[int] = set()
-        for qid, t in rows:
-            n_req[qid] = n_req.get(qid, 0) + 1
-            if t not in idf_map:
-                dead.add(qid)
-        rows = [(qid, t) for qid, t in rows if qid not in dead]
-        if not rows:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        require_all = {q: n for q, n in n_req.items() if q not in dead}
-        all_terms = sorted({t for _, t in rows})
-
-    ex_map: dict[int, set] | None = None
-    ex_rows: list = []
-    if exclude_terms:
-        live = {qid for qid, _ in rows}
-        ex_map = {
-            int(qid): set(ts)
-            for qid, ts in exclude_terms.items()
-            if ts and int(qid) in live
-        } or None
-    if ex_map:
-        ex_terms = sorted({t for s in ex_map.values() for t in s})
-        new = [t for t in ex_terms if t not in idf_map]
-        if new:
-            # presence probe only — absent-from-index terms exclude nothing
-            idf_map.update(_idf_for(new))
-        ex_rows = [
-            (qid, t)
-            for qid, s in sorted(ex_map.items())
-            for t in sorted(s)
-            if t in idf_map
-        ]
-        all_terms = sorted(set(all_terms) | {t for _, t in ex_rows})
-
-    dem_map: dict[int, set] | None = None
-    dem_keep: dict[int, set] | None = None
-    dem_rows: list = []
-    if demote_terms:
-        live = {qid for qid, _ in rows}
-        pos_by_q: dict[int, set] = {}
-        for qid, t in rows:
-            pos_by_q.setdefault(qid, set()).add(t)
-        dem_map = {
-            int(qid): set(ts)
-            for qid, ts in demote_terms.items()
-            if ts and int(qid) in live
-        } or None
-        if dem_map:
-            new_t = sorted(
-                {t for ts in dem_map.values() for t in ts} - set(idf_map)
-            )
-            if new_t:
-                # presence probe only — absent terms demote nothing
-                idf_map.update(_idf_for(new_t))
-            dem_keep = {
-                qid: (ts & pos_by_q.get(qid, set()))
-                for qid, ts in dem_map.items()
-            }
-            dem_rows = [
-                (qid, t)
-                for qid, ts in sorted(dem_map.items())
-                for t in sorted(ts)
-                if t in idf_map
-            ]
-            all_terms = sorted(set(all_terms) | {t for _, t in dem_rows})
-
-    pruned = pidx.index.filter(F.col("term").isin(all_terms))
-    qids_by_term: dict[str, list[int]] = {}
-    for qid, t in rows:
-        qids_by_term.setdefault(t, []).append(qid)
-    for qid, t in ex_rows:
-        # negated rows join the same fan-out; skip the dup when a term is
-        # both positive and negated for one query (the scorer's term-set
-        # split routes the single row to exclusion — the negation wins)
-        if qid not in qids_by_term.setdefault(t, []):
-            qids_by_term[t].append(qid)
-    for qid, t in dem_rows:
-        # demote rows join the fan-out too; a positive+demoted term's
-        # single row is routed to BOTH roles by the scorer's demote_keep
-        if qid not in qids_by_term.setdefault(t, []):
-            qids_by_term[t].append(qid)
-    map_entries = [
-        x
-        for t, qs in qids_by_term.items()
-        if t in idf_map  # terms absent from the index match nothing (OR)
-        for x in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
-    ]
-    if not map_entries:
-        return spark.createDataFrame([], _TOPK_SCHEMA)
-    matched = pruned.withColumn(
-        "query_id", F.explode(F.create_map(*map_entries)[F.col("term")])
+    return _bm25_topk(
+        [pidx], queries, cfg, k=k, params=params, exhaustive=exhaustive,
+        round_dp=round_dp, fuzzy=fuzzy, conjunctive=conjunctive,
+        doc_filters=None if doc_filter is None else [doc_filter],
+        doc_boosts=None if doc_boost is None else [doc_boost],
+        query_terms=query_terms, term_weights=term_weights,
+        exclude_terms=exclude_terms, offset=offset, search_after=search_after,
+        min_should_match=min_should_match, demote_terms=demote_terms,
+        negative_boost=negative_boost,
     )
-    if doc_filter is not None:
-        # inner join: chunks whose allowed-set is empty vanish before decode
-        matched = matched.join(_allowed_by_chunk(pidx, doc_filter), "chunk")
-    if doc_boost is not None:
-        # LEFT join: chunks without boosted docs keep default 1.0 boosts
-        matched = matched.join(_boost_by_chunk(pidx, doc_boost), "chunk", "left")
-    k_top = (k + offset) if not exhaustive else max(k + offset,
-                                                    pidx.manifest["n_docs"])
-    # tombstoned docs are masked at decode (indexing/deletes.py); chunk
-    # upper bounds stay valid over any subset, so pruning is unchanged
-    mask = pidx.delete_mask()
-    dec = mask.wrap_decoders()[0] if mask is not None else None
-    sa_map = None
-    if search_after is not None:
-        sa_map = {int(q): (float(s), int(d))
-                  for q, (s, d) in search_after.items()}
-    mm_map = None
-    if min_should_match is not None:
-        qids = {qid for qid, _ in rows}
-        if isinstance(min_should_match, dict):
-            mm_map = {qid: int(min_should_match[qid]) for qid in qids
-                      if qid in min_should_match}
-        else:
-            mm_map = {qid: int(min_should_match) for qid in qids}
-    scorer = _wand_scorer(k_top, params, round_dp, idf_map, decode=dec,
-                          qweights=term_weights, require_all=require_all,
-                          min_match=mm_map,
-                          exclude_terms=ex_map, search_after=sa_map,
-                          demote_terms=dem_map, demote_keep=dem_keep,
-                          demote_factor=float(negative_boost))
-    out = matched.groupBy("query_id").applyInPandas(scorer, schema=_TOPK_SCHEMA)
-    if exhaustive:
-        out = out.filter(F.col("rank") <= k + offset)
-    if offset:
-        # page [offset, offset+k): ranks stay ABSOLUTE (ES from/size)
-        out = out.filter(F.col("rank") > offset)
-    return out
+
 
 
 def boolean_search_packed(

@@ -54,8 +54,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..indexing import fsio
-from ..indexing.build import Bm25Params
-from ..indexing.packed import _encode_group, _stage_dirs, INDEX_SCHEMA
+from ..indexing.build import Bm25Params, idf_col
+from ..indexing.packed import _encode_partition, _stage_dirs, INDEX_SCHEMA
 from ..tokenizer import TokenizerConfig, tokens_column
 from ..indexing.docids import DOC_ID, unpersist_doc_ids, with_doc_ids
 
@@ -178,9 +178,18 @@ def append_batch(
         dlq = F.round(F.round(F.col("dl") / F.lit(avgdl), 3) * 1000.0).cast("long")
         tok = docs.select(DOC_ID, dlq.alias("dlq"), F.explode("tokens").alias("term"))
         tf = tok.groupBy("term", DOC_ID, "dlq").agg(F.count("*").alias("tf"))
-    tf = tf.withColumn("chunk", (F.col(DOC_ID) / chunk_docs).cast("long"))
-    chunks = tf.groupBy("term", "chunk").applyInPandas(
-        _encode_group(params, payload, positional), schema=INDEX_SCHEMA
+    # the build's encoder (one range shuffle, (term, doc_id)-sorted
+    # partitions, one vectorized pass per Arrow batch; chunk derives from
+    # the offset doc_id) — a per-(term, chunk) Python call costs
+    # O(batch terms) and dominated append time
+    sort_cols = ["term", DOC_ID] + (["pos"] if positional else [])
+    chunks = (
+        tf.repartitionByRange("term", DOC_ID)
+        .sortWithinPartitions(*sort_cols)
+        .mapInPandas(
+            _encode_partition(params, chunk_docs, positional, payload),
+            schema=INDEX_SCHEMA,
+        )
     )
     # staging writes: overwrite (a retried half-written epoch is replaced)
     chunks.write.mode("overwrite").parquet(adirs["index"])
@@ -254,9 +263,7 @@ def append_batch(
         "term",
         (F.coalesce(F.col("df"), F.lit(0)) + F.coalesce(F.col("df_delta"), F.lit(0))).alias("df"),
     )
-    merged = merged.withColumn(
-        "idf", F.round(F.log(F.lit(float(n_live)) / F.col("df")), 3)
-    )
+    merged = merged.withColumn("idf", idf_col(n_live))
     merged.coalesce(8).write.mode("overwrite").parquet(adirs["term_stats"])
 
     # ---- the commit point: one atomic manifest replace --------------------

