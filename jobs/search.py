@@ -141,6 +141,31 @@ def _topk_frame(spark, pidx, cfg, queries, ranker, n, exhaustive,
     parquet sink (--queries-file/--output) instead of the driver."""
     from pyspark.sql import functions as F
 
+    if rescore_spec is not None:
+        # the --rescore branch returns before every other branch: refuse
+        # (naming each flag) what it would otherwise silently drop
+        dropped = [flag for flag, given in (
+            (f"--ranker {ranker}", ranker != "bm25"), ("--prf", prf),
+            ("--fuzzy", fuzzy), ("--wildcard", wildcard is not None),
+            ("--regexp", regexp is not None),
+            ("--synonyms", synonyms is not None),
+            ("--filter", doc_filter is not None),
+            ("--boost", doc_boost is not None), ("--offset", offset),
+            ("--search-after", search_after is not None),
+            ("--collapse", collapse is not None),
+            ("--collapse-inner-hits", inner_hits is not None),
+            ("--demote", demote is not None),
+            ("--min-should-match", min_match is not None),
+            ("--dismax", dismax is not None), ("--sort", sort_spec is not None),
+            ("--decay", decay_spec is not None), ("--fvf", fvf_spec is not None),
+            ("--pin", pins is not None),
+            ("--random-score", random_seed is not None),
+            ("--constant-score", constant_score is not None),
+            ("--max-query-cost", max_cost is not None),
+        ) if given]
+        if dropped:
+            raise SystemExit("--rescore combines only with plain bm25 "
+                             f"retrieval, not {', '.join(dropped)}")
     if isinstance(min_match, str):
         # ES/Lucene minimum_should_match value grammar (query/msm.py):
         # one spec, per-query resolved floors
@@ -197,17 +222,6 @@ def _topk_frame(spark, pidx, cfg, queries, ranker, n, exhaustive,
         raise SystemExit("--demote is wired to the bm25* rankers "
                          "(does not combine with --prf)")
     if rescore_spec is not None:
-        if (ranker != "bm25" or prf or fuzzy or wildcard is not None
-                or regexp is not None
-                or synonyms is not None or doc_filter is not None
-                or doc_boost is not None or offset
-                or search_after is not None or collapse is not None
-                or demote is not None or min_match is not None
-                or dismax is not None or sort_spec is not None
-                or decay_spec is not None or fvf_spec is not None
-                or pins is not None or random_seed is not None):
-            raise SystemExit("--rescore combines only with plain bm25 "
-                             "retrieval (not --pin or --random-score)")
         from searchengine_spark.query.rescore import rescore_topk
         from searchengine_spark.query.wand import resolve_docs as _resolve
 

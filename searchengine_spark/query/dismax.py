@@ -119,12 +119,12 @@ def combined_wand_scorer(
     ``decoders``: {sub_id: decode hook} — the multi-field seam (each
     field index carries its own tombstone mask); ``decode`` is the
     single-index default."""
-    import heapq
 
     import numpy as np
     import pandas as pd
 
     from ..indexing.codec import decode_postings, tf_saturation
+    from .wand import _heap_frame, _offer_topk, _rows_by_chunk
 
     if combine not in ("dismax", "sum"):
         raise ValueError(f"unknown combine {combine!r}")
@@ -149,12 +149,12 @@ def combined_wand_scorer(
             smax = ub_sub.groupby(level=0).max()
             bounds = (smax + tie_l * (ssum - smax)).sort_values(
                 ascending=False)
-        by_chunk = dict(tuple(pdf.groupby("chunk")))
+        by_chunk = _rows_by_chunk(pdf["chunk"].to_numpy())
         heap: list = []  # min-heap of (score, -doc_id)
         for chunk, bound in bounds.items():
             if len(heap) >= k_top and bound < heap[0][0] - eps:
                 continue  # safe skip: combined score <= combined bound
-            rows = by_chunk[chunk]
+            rows = pdf.iloc[by_chunk[chunk]]
             sub_docs: list = []
             sub_scores: list = []
             for sub, srows in rows.groupby("sub_id"):
@@ -192,29 +192,8 @@ def combined_wand_scorer(
                 scores = s_max + tie_l * (s_sum - s_max)
             if round_dp is not None:
                 scores = np.round(scores, round_dp)
-            n = len(uniq)
-            if n > k_top:
-                thresh = np.partition(scores, n - k_top)[n - k_top]
-                keep = scores >= thresh
-                uniq, scores = uniq[keep], scores[keep]
-            order = np.lexsort((uniq, -scores))[:k_top]
-            for i in order:
-                item = (float(scores[i]), -int(uniq[i]))
-                if len(heap) < k_top:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-                else:
-                    break
-        out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(out), qid, dtype=np.int32),
-                "doc_id": np.array([-d for _, d in out], dtype=np.int64),
-                "score": np.array([s for s, _ in out], dtype=np.float64),
-                "rank": np.arange(1, len(out) + 1, dtype=np.int32),
-            }
-        )
+            _offer_topk(heap, uniq, scores, k_top)
+        return _heap_frame(qid, heap)
 
     return score_query
 

@@ -431,13 +431,13 @@ def _cross_fields_wand(
     scans with the blended idf × boost as a literal-map column, ONE
     groupBy(query) exchange. Gated bit-identical to the score-all
     composition in tests/test_multimatch.py."""
-    import heapq
 
     import numpy as np
     import pandas as pd
 
     from ..indexing.codec import decode_postings, tf_saturation
     from .dismax import _topk_schema
+    from .wand import _heap_frame, _offer_topk, _rows_by_chunk
 
     any_p = next(iter(fidx.values()))
     spark = any_p.spark
@@ -498,12 +498,12 @@ def _cross_fields_wand(
         t_dismax = t_max + tie_l * (t_sum - t_max)
         bounds = t_dismax.groupby(level=0).sum().sort_values(
             ascending=False)
-        by_chunk = dict(tuple(pdf.groupby("chunk")))
+        by_chunk = _rows_by_chunk(pdf["chunk"].to_numpy())
         heap: list = []
         for chunk, bound in bounds.items():
             if len(heap) >= k_top and bound < heap[0][0] - eps:
                 continue
-            rows = by_chunk[chunk]
+            rows = pdf.iloc[by_chunk[chunk]]
             term_docs: list = []
             term_scores: list = []
             for _t, trows in rows.groupby("term"):
@@ -549,29 +549,8 @@ def _cross_fields_wand(
             scores = np.add.reduceat(sc, start)
             if round_dp is not None:
                 scores = np.round(scores, round_dp)
-            n = len(uniq)
-            if n > k_top:
-                thresh = np.partition(scores, n - k_top)[n - k_top]
-                keep = scores >= thresh
-                uniq, scores = uniq[keep], scores[keep]
-            order = np.lexsort((uniq, -scores))[:k_top]
-            for i in order:
-                item = (float(scores[i]), -int(uniq[i]))
-                if len(heap) < k_top:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-                else:
-                    break
-        out = sorted(heap, key=lambda x: (-x[0], -x[1]))
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(out), qid, dtype=np.int32),
-                "doc_id": np.array([-d for _, d in out], dtype=np.int64),
-                "score": np.array([s for s, _ in out], dtype=np.float64),
-                "rank": np.arange(1, len(out) + 1, dtype=np.int32),
-            }
-        )
+            _offer_topk(heap, uniq, scores, k_top)
+        return _heap_frame(qid, heap)
 
     return uni.groupBy("query_id").applyInPandas(score_query, schema=schema)
 

@@ -6,9 +6,13 @@ in-process loop over a locally loaded index — ~446 ms/query single-node
 query is the wrong execution tier: job scheduling + task launch dominate
 (p50 ~0.5-1.3 s regardless of data size). LocalSearcher serves the hot
 path with ZERO Spark jobs: the packed index's matched slices live in
-driver memory and queries run the SAME pandas/numpy scorer code the
-distributed batch paths use (``_wand_scorer``, ``packed_prox_scorer``,
-``_scorer``) — results are gated identical in tests/test_serve.py.
+driver memory and queries run the SAME scorer code the distributed batch
+paths use (``_wand_scorer``, ``packed_prox_scorer``, ``_scorer``) —
+results are gated identical in tests/test_serve.py. BM25 runs the
+array-native block-max scorer (query/wand.py): a hot preloaded query
+costs ~1.5 ms, of which decode is ~2%; ``last_profile`` keeps the scorer
+counters of the last search (chunks visited/skipped, rows decoded,
+candidates, heap pushes).
 
 Two modes:
 
@@ -128,8 +132,10 @@ class LocalSearcher:
         self._norms: Dict[str, Dict[int, float]] = {}
         self._all_terms_cached = False
         self._all_docs_cached = False
-        # decoded-postings LRU: varbyte decode dominates big-index queries
-        # (~80% measured at 252M postings) — repeat terms skip it entirely.
+        # the last search's scorer counters (query/wand.py STAT_FIELDS)
+        self.last_profile: dict = {}
+        # decoded-postings LRU: repeat terms skip varbyte decode entirely
+        # (with it, decode is ~2% of a hot query on perfbench `serve`).
         # Keyed by id(buf); the buffer is kept in the value so the id can't
         # be recycled while the entry lives. Capped by Σ decoded postings.
         self.decoded_cache_postings = decoded_cache_postings
@@ -402,6 +408,7 @@ class LocalSearcher:
         ``allow_leading_wildcard``) and join the query exactly like
         wildcards. Same ranker gating; combines with wildcard=True
         (each syntax parses its own words)."""
+        self.last_profile = {}  # filled by the bm25 scorer, if it runs
         if ranker not in RANKERS:
             raise ValueError(f"ranker must be one of {RANKERS}, got {ranker!r}")
         if wildcard or regexp:
@@ -576,6 +583,7 @@ class LocalSearcher:
                 search_after=sa,
                 demote_terms=dem_map, demote_keep=dem_keep,
                 demote_factor=float(negative_boost),
+                stats=self.last_profile,
             )
             out = scorer(pdf)
             if offset:
@@ -924,7 +932,11 @@ class LocalSearcher:
         return self._resolve(out, resolve)
 
     def _resolve(self, out: pd.DataFrame, resolve: bool) -> List[dict]:
-        rows = out.to_dict("records")
+        # column .tolist() yields native int/float values, like
+        # to_dict("records"), without its per-cell boxing
+        cols = list(out.columns)
+        rows = [dict(zip(cols, vals))
+                for vals in zip(*(out[c].tolist() for c in cols))]
         if resolve and self._ext_cols:
             self._ensure_docs([int(r["doc_id"]) for r in rows])
             for r in rows:

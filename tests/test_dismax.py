@@ -8,6 +8,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
+from searchengine_spark.fixtures import STOP_WORDS_PATH
 from searchengine_spark.fixtures.transcripts import transcripts_df
 from searchengine_spark.indexing.build import Bm25Params
 from searchengine_spark.indexing.packed import build_packed_index, load_packed_index
@@ -23,8 +24,12 @@ GROUPS = [
 
 
 @pytest.fixture(scope="module")
-def cfg(stop_words):
-    return TokenizerConfig(min_token_length=3, stop_words=stop_words)
+def cfg():
+    # the committed stop-word list: none of these gates compares against
+    # the live reference engine
+    return TokenizerConfig(
+        min_token_length=3,
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH))
 
 
 @pytest.fixture(scope="module")

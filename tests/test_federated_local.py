@@ -9,7 +9,7 @@ the plain LocalSearcher (the seams must not distort the degenerate case).
 import pyspark.sql.functions as F
 import pytest
 
-from searchengine_spark.fixtures import transcripts_df
+from searchengine_spark.fixtures import STOP_WORDS_PATH, transcripts_df
 from searchengine_spark.indexing.deletes import delete_docs
 from searchengine_spark.indexing.packed import build_packed_index, load_packed_index
 from searchengine_spark.query.federated import (
@@ -26,8 +26,12 @@ QUERIES = ["greatest rock album", "guitar solo legendary", "drummer tour"]
 
 
 @pytest.fixture(scope="module")
-def cfg(stop_words):
-    return TokenizerConfig(min_token_length=3, stop_words=stop_words)
+def cfg():
+    # the committed stop-word list: none of these gates compares against
+    # the live reference engine
+    return TokenizerConfig(
+        min_token_length=3,
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH))
 
 
 @pytest.fixture(scope="module")

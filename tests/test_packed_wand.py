@@ -9,6 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from searchengine_spark.fixtures import STOP_WORDS_PATH
 from searchengine_spark.fixtures.transcripts import REFERENCE_QUERIES, transcripts_df
 from searchengine_spark.indexing.build import Bm25Params, build_index
 from searchengine_spark.indexing.packed import (
@@ -24,8 +25,12 @@ PARAMS = Bm25Params(k=1.2, b=0.75)
 
 
 @pytest.fixture(scope="module")
-def cfg(stop_words):
-    return TokenizerConfig(min_token_length=3, stop_words=stop_words)
+def cfg():
+    # the committed stop-word list: none of these gates compares against
+    # the live reference engine
+    return TokenizerConfig(
+        min_token_length=3,
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH))
 
 
 @pytest.fixture(scope="module")

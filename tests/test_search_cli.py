@@ -39,11 +39,17 @@ def index_path(spark, tmp_path_factory):
 @pytest.mark.parametrize("extra, flag", [
     (["--pin", "conv000001|0"], "--pin"),
     (["--random-score", "7"], "--random-score"),
+    (["--collapse", "conv_id", "--collapse-inner-hits", "2"],
+     "--collapse-inner-hits"),
+    (["--ranker", "boolean_or", "--constant-score", "1.5"],
+     "--constant-score"),
+    (["--max-query-cost", "1000000000"], "--max-query-cost"),
 ])
 def test_rescore_refuses_flags_it_would_drop(spark, index_path, monkeypatch,
                                              extra, flag):
-    """--rescore returns before the --pin and --random-score branches, so
-    each combination must exit non-zero with a message naming the flag."""
+    """--rescore returns before the other branches (and its secondary
+    query escapes the cost check), so each combination must exit non-zero
+    with a message naming the flag."""
     cli = _search_cli()
     monkeypatch.setattr(sys, "argv", [
         "search.py", "--index", index_path, "--query", "rock album",

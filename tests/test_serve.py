@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from searchengine_spark.fixtures import STOP_WORDS_PATH
 from searchengine_spark.fixtures.transcripts import REFERENCE_QUERIES, transcripts_df
 from searchengine_spark.indexing.build import Bm25Params
 from searchengine_spark.indexing.packed import build_packed_index, load_packed_index
@@ -23,8 +24,12 @@ QUERIES = list(REFERENCE_QUERIES[:8])
 
 
 @pytest.fixture(scope="module")
-def cfg(stop_words):
-    return TokenizerConfig(min_token_length=3, stop_words=stop_words)
+def cfg():
+    # the committed stop-word list: none of these gates compares against
+    # the live reference engine
+    return TokenizerConfig(
+        min_token_length=3,
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH))
 
 
 @pytest.fixture(scope="module")
@@ -146,6 +151,47 @@ def test_lazy_equals_preload(pidx, local, cfg):
     n_slices = len(lazy._slices)
     assert _loc(lazy.search(QUERIES[0], k=10, ranker="bm25", resolve=False))
     assert len(lazy._slices) == n_slices
+
+
+def test_last_profile_counts_match_decode_hook(pidx, cfg, monkeypatch):
+    """search() keeps the scorer counters of its call in last_profile:
+    rows decoded == calls to the searcher's decode hook, every matched
+    chunk is visited or skipped, and a fresh dict each call."""
+    from searchengine_spark.query.wand import STAT_FIELDS
+    from searchengine_spark.tokenizer import tokenize_text
+
+    ls = LocalSearcher(pidx, preload=True, cfg=cfg)
+    hook, calls = ls._dec, []
+
+    def counting(buf):
+        calls.append(id(buf))
+        return hook(buf)
+
+    monkeypatch.setattr(ls, "_dec", counting)
+    seen = []
+    for k in (1, 10):
+        for q in QUERIES:
+            del calls[:]
+            ls.search(q, k=k, resolve=False)
+            prof = ls.last_profile
+            assert set(prof) == set(STAT_FIELDS)
+            assert prof["rows_decoded"] == len(calls) == len(set(calls))
+            pdf = ls._matched(list(dict.fromkeys(tokenize_text(q, cfg))))
+            assert (prof["chunks_visited"] + prof["chunks_skipped"]
+                    == pdf["chunk"].nunique())
+            # a visited chunk decodes all its rows: the decoded buffers
+            # are exactly the rows of the visited chunks
+            by_id = {id(b): c for b, c in zip(pdf["postings"], pdf["chunk"])}
+            visited = {by_id[i] for i in calls}
+            assert len(visited) == prof["chunks_visited"]
+            assert len(calls) == pdf["chunk"].isin(visited).sum()
+            assert prof["heap_pushes"] <= prof["candidates"]
+            assert prof["candidates"] <= k * prof["chunks_visited"]
+            assert all(prof is not p for p in seen)
+            seen.append(prof)
+    assert sum(p["chunks_skipped"] for p in seen) > 0  # pruning exercised
+    ls.search("the and of")
+    assert ls.last_profile == {}  # no scorer ran
 
 
 def test_unknown_and_empty_queries(local):
