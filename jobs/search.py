@@ -30,10 +30,13 @@ relevance file (reference src/efficiency.py semantics).
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
+import math
 import os
 import sys
 import time
+from typing import Callable, NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -556,71 +559,6 @@ def _run_queries(spark, pidx, cfg, queries, ranker, n, exhaustive,
             for i in range(len(queries))]
 
 
-def _attach_snippets(spark, source, pidx, cfg, queries, per_q) -> None:
-    """Fetch the result rows' source texts (one pruned read over the
-    bounded result set) and attach a best-window snippet to each."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.query.snippet import extract_snippet
-
-    ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-    keys = {
-        tuple(r[c] for c in ext) for res in per_q for r in res if ext
-    }
-    if not keys:
-        return
-    src = spark.read.parquet(source)
-    # bounded-set fetch as a broadcast semi-join (a literal OR-of-AND
-    # predicate tree grows with the result set and doesn't push down)
-    kdf = spark.createDataFrame(sorted(keys), schema=src.select(*ext).schema)
-    texts = {
-        tuple(r[c] for c in ext): r["text"]
-        for r in src.join(F.broadcast(kdf), on=ext).select(*ext, "text").collect()
-    }
-    memo: dict = {}
-    for q, res in zip(queries, per_q):
-        for r in res:
-            text = texts.get(tuple(r.get(c) for c in ext))
-            if text is None:
-                continue
-            sn = extract_snippet(text, q, cfg, _memo=memo)
-            if sn is not None:
-                r["snippet"] = sn["snippet"]
-
-
-def _attach_highlights(spark, source, pidx, cfg, queries, per_q) -> None:
-    """--highlight: whole-field <em> tags around every analyzed
-    query-term occurrence (query/highlight.py highlight_text), fetched
-    over the same bounded result-set read as --snippet-source."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.query.highlight import highlight_text
-    from searchengine_spark.tokenizer import tokenize_text
-
-    ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-    keys = {
-        tuple(r[c] for c in ext) for res in per_q for r in res if ext
-    }
-    if not keys:
-        return
-    src = spark.read.parquet(source)
-    kdf = spark.createDataFrame(sorted(keys), schema=src.select(*ext).schema)
-    texts = {
-        tuple(r[c] for c in ext): r["text"]
-        for r in src.join(F.broadcast(kdf), on=ext).select(*ext, "text").collect()
-    }
-    memo: dict = {}
-    for q, res in zip(queries, per_q):
-        terms = list(dict.fromkeys(tokenize_text(q, cfg)))
-        for r in res:
-            text = texts.get(tuple(r.get(c) for c in ext))
-            if text is None:
-                continue
-            hl, n = highlight_text(text, terms, cfg, _memo=memo)
-            if hl is not None:
-                r["highlighted"], r["n_matches"] = hl, n
-
-
 def _fuzziness(args):
     f = args.fuzziness
     return f if f == "auto" else int(f)
@@ -669,21 +607,6 @@ def _resolve_msm_one(spec, query, cfg):
 
     n = len(dict.fromkeys(tokenize_text(query, cfg)))
     return resolve_min_should_match(spec, max(n, 1))
-
-
-def _facet_approx(args):
-    """--facet-approx N_SHARDS:SHARD_SIZE -> (int, int) or None."""
-    spec = getattr(args, "facet_approx", None)
-    if not spec:
-        return None
-    try:
-        ns, ss = spec.split(":")
-        ns, ss = int(ns), int(ss)
-    except ValueError:
-        raise SystemExit("--facet-approx wants N_SHARDS:SHARD_SIZE")
-    if ns < 1 or ss < 1:
-        raise SystemExit("--facet-approx values must be >= 1")
-    return (ns, ss)
 
 
 def _decay(args):
@@ -750,7 +673,115 @@ def _rx(args):
     return (args.max_expansions, args.allow_leading_wildcard)
 
 
-def _print_context(spark, source_path, pidx, queries, per_q, spec) -> None:
+# ---- result-set post-processing, shared by --index and --shards ------
+#
+# Everything below consumes the resolved per-query result dicts, so one
+# implementation serves both tiers: source texts (--snippet-source,
+# --highlight), --context, the --sampler/--diversified cut, the
+# attribute aggregations and --significant. Every spec is parsed once,
+# right after argparse and before the SparkSession exists
+# (_parse_post_specs); the parsed value is what the printers receive.
+
+
+def _cols(spec: str) -> list:
+    return [c.strip() for c in spec.split(",") if c.strip()]
+
+
+def _col_specs(spec: str, flag: str, shape: str, conv) -> list:
+    """``COL:ARG[,COL:ARG...]`` -> [(col, conv(ARG)), ...]."""
+    out = []
+    for part in spec.split(","):
+        if ":" not in part:
+            raise SystemExit(f"{flag} expects COL:{shape}, got {part!r}")
+        c, arg = part.rsplit(":", 1)
+        out.append((c.strip(), conv(arg, part)))
+    return out
+
+
+def _hits_frame(spark, ext_cols, per_q, extra=()):
+    """(query_id, *ext_cols, *extra names) over every result row, or
+    None when no query has a hit. ``extra`` = ((name, row -> value),)."""
+    rows = [
+        tuple([i] + [r[c] for c in ext_cols] + [get(r) for _, get in extra])
+        for i, res in enumerate(per_q)
+        for r in res
+    ]
+    if not rows:
+        return None
+    return spark.createDataFrame(
+        rows, ["query_id", *ext_cols, *(name for name, _ in extra)])
+
+
+_RANK = (("rank", lambda r: r["rank"]),)
+_SCORE_RANK = (("score", lambda r: float(r.get("score", 0.0))),
+               ("rank", lambda r: int(r.get("rank", 0))))
+
+
+def _attach_texts(spark, source, ext_cols, cfg, queries, per_q,
+                  highlight) -> None:
+    """--snippet-source: one bounded read of the result rows' source
+    texts, then (with --highlight) the whole field with <em> tags around
+    every analyzed query-term occurrence (query/highlight.py) and a
+    best-window snippet (query/snippet.py) on every row."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.query.highlight import highlight_text
+    from searchengine_spark.query.snippet import extract_snippet
+    from searchengine_spark.tokenizer import tokenize_text
+
+    keys = {
+        tuple(r[c] for c in ext_cols) for res in per_q for r in res if ext_cols
+    }
+    if not keys:
+        return
+    src = spark.read.parquet(source)
+    # bounded-set fetch as a broadcast semi-join (a literal OR-of-AND
+    # predicate tree grows with the result set and doesn't push down)
+    kdf = spark.createDataFrame(sorted(keys),
+                                schema=src.select(*ext_cols).schema)
+    texts = {
+        tuple(r[c] for c in ext_cols): r["text"]
+        for r in src.join(F.broadcast(kdf), on=ext_cols)
+        .select(*ext_cols, "text").collect()
+    }
+
+    def hit_texts(res):
+        for r in res:
+            text = texts.get(tuple(r.get(c) for c in ext_cols))
+            if text is not None:
+                yield r, text
+
+    if highlight:
+        memo: dict = {}
+        for q, res in zip(queries, per_q):
+            terms = list(dict.fromkeys(tokenize_text(q, cfg)))
+            for r, text in hit_texts(res):
+                hl, n = highlight_text(text, terms, cfg, _memo=memo)
+                if hl is not None:
+                    r["highlighted"], r["n_matches"] = hl, n
+    memo = {}
+    for q, res in zip(queries, per_q):
+        for r, text in hit_texts(res):
+            sn = extract_snippet(text, q, cfg, _memo=memo)
+            if sn is not None:
+                r["snippet"] = sn["snippet"]
+
+
+def _parse_context(spec, args):
+    if not args.snippet_source:
+        raise SystemExit("--context needs --snippet-source (the table "
+                         "carrying the surrounding turns)")
+    try:
+        nb, na = (int(v) for v in spec.split(","))
+    except ValueError:
+        raise SystemExit("--context wants N_BEFORE,N_AFTER")
+    if nb < 0 or na < 0:
+        raise SystemExit("--context wants N_BEFORE,N_AFTER >= 0")
+    return nb, na
+
+
+def _print_context(spark, source_path, ext_cols, queries, per_q,
+                   spec) -> None:
     """--context B,A (with --snippet-source): context-window expansion
     (query/context.py) — for every hit, the ±window turns of the same
     conversation from the source table, one JSON line per query:
@@ -758,14 +789,6 @@ def _print_context(spark, source_path, pidx, queries, per_q, spec) -> None:
     offset, role, text}, ...]}."""
     from searchengine_spark.query.context import with_context_turns
 
-    if not source_path:
-        raise SystemExit("--context needs --snippet-source (the table "
-                         "carrying the surrounding turns)")
-    try:
-        nb, na = (int(v) for v in spec.split(","))
-    except ValueError:
-        raise SystemExit("--context wants N_BEFORE,N_AFTER")
-    ext_cols = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
     if ext_cols != ["conv_id", "turn_idx"]:
         raise SystemExit("--context expects a (conv_id, turn_idx) index")
     rows = [
@@ -777,7 +800,7 @@ def _print_context(spark, source_path, pidx, queries, per_q, spec) -> None:
         hits = spark.createDataFrame(
             rows, ["query_id", "rank", "conv_id", "turn_idx"])
         corpus = spark.read.parquet(source_path)
-        got = with_context_turns(hits, corpus, nb, na).collect()
+        got = with_context_turns(hits, corpus, *spec).collect()
         for r in sorted(got, key=lambda r: (r["query_id"], r["rank"],
                                             r["ctx_turn_idx"])):
             d = r.asDict()
@@ -787,92 +810,195 @@ def _print_context(spark, source_path, pidx, queries, per_q, spec) -> None:
         print(json.dumps({"query": q, "context": by_q[i]}, default=str))
 
 
-def _print_facets(spark, attrs_path, ext_cols, queries, per_q,
-                  facet_spec, k, approx=None) -> None:
-    """--facets: ES terms-aggregation analog over each query's result set
-    (query/facets.py), computed from the already-resolved result rows —
-    serving-tier-agnostic like snippets/relevance. Prints one JSON line
-    per query: {"query", "facets": {col: [{value, n}, ...]}}.
-    ``approx`` = (n_shards, shard_size): route through the ES shard
-    approximation instead (approx_facet_counts) — each bucket then also
-    carries "err", its doc_count_error_upper_bound."""
-    from searchengine_spark.query.facets import approx_facet_counts, facet_counts
+def _parse_sampler(spec, args):
+    """--sampler N: ES sampler aggregation — each query's AGGREGATION
+    input cut to its N best-ranked hits (per_q lists are already
+    retrieval-ordered); composes BEFORE --diversified, exactly ES's
+    sampler > diversified_sampler nesting."""
+    if spec < 1:
+        raise SystemExit("--sampler wants a positive size")
+    return spec
 
-    cols = [c.strip() for c in facet_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
+
+def _parse_diversified(spec, args):
+    parts = spec.split(":")
+    if len(parts) > 2 or not parts[0].strip():
+        raise SystemExit("--diversified wants FIELD[:MAX]")
+    return parts[0].strip(), int(parts[1]) if len(parts) > 1 else 1
+
+
+def _apply_diversified(spark, attrs_path, ext_cols, per_q, spec):
+    """--diversified FIELD[:MAX]: ES diversified_sampler — cap each
+    query's result set at MAX hits per FIELD value (best-ranked survive,
+    ext-id tiebreak, NULL-field hits always pass) BEFORE the aggregation
+    printers run, so they aggregate over the SAMPLE — exactly ES's
+    sampler>sub-agg nesting. Returns the filtered per_q lists; the
+    printed results are untouched."""
+    from searchengine_spark.query.aggregations import diversified_sample
+
+    hits = _hits_frame(spark, ext_cols, per_q, _RANK)
+    if hits is None:
+        return per_q
+    field, maxv = spec
+    kept = diversified_sample(hits, spark.read.parquet(attrs_path), field,
+                              ext_cols, max_per_value=maxv)
+    keep = {(r["query_id"], tuple(r[c] for c in ext_cols))
+            for r in kept.collect()}
+    return [
+        [r for r in res
+         if (i, tuple(r[c] for c in ext_cols)) in keep]
         for i, res in enumerate(per_q)
-        for r in res
     ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
+
+
+class _AggInput(NamedTuple):
+    """What an aggregation's ``run`` sees: the hits frame (query_id,
+    *ext cols, *extra), the ext cols, the batch's query texts and the
+    --attrs table."""
+
+    hits: object
+    ext: list
+    queries: list
+    attrs_path: str | None
+
+    @property
+    def attrs(self):
+        return self.hits.sparkSession.read.parquet(self.attrs_path)
+
+
+class _Agg(NamedTuple):
+    """One result-set aggregation flag (ES analog over each query's
+    hits), printed as {"query", KEY: value} with KEY = ``key`` or the
+    flag's dest. ``parse(spec, args)`` -> the value ``run`` receives
+    (runs before Spark starts; a malformed spec exits naming the flag);
+    ``run(inp, parsed, by_q)`` fills ``by_q`` (query_id -> the JSON
+    value); ``finish(value, parsed)`` shapes a query's value for
+    printing. ``page``: aggregates the full ranked page (no sampler, no
+    --attrs)."""
+
+    dest: str
+    parse: Callable
+    run: Callable
+    empty: type = dict
+    extra: tuple = ()
+    str_default: bool = False
+    page: bool = False
+    finish: Callable | None = None
+    key: str | None = None
+
+
+def _print_agg(spark, agg, spec, attrs_path, ext_cols, queries,
+               per_q) -> None:
+    """The shared printer: hits frame -> ``agg.run`` -> one JSON line
+    per query, {"query", KEY: value}."""
+    by_q = {i: agg.empty() for i in range(len(queries))}
+    hits = _hits_frame(spark, ext_cols, per_q, agg.extra)
+    if hits is not None:
+        agg.run(_AggInput(hits, ext_cols, queries, attrs_path), spec, by_q)
+    for i, q in enumerate(queries):
+        val = agg.finish(by_q[i], spec) if agg.finish else by_q[i]
+        print(json.dumps({"query": q, agg.key or agg.dest: val},
+                         default=str if agg.str_default else None))
+
+
+def _by_col(fn_name, shape):
+    """run for the aggregations emitting one (query_id, col, ...) row per
+    column: by_q[qid][col] = shape(row)."""
+    def run(inp, cols, by_q):
+        from searchengine_spark.query import aggregations
+
+        fn = getattr(aggregations, fn_name)
+        for r in fn(inp.hits, inp.attrs, cols, inp.ext).collect():
+            by_q[r["query_id"]][r["col"]] = shape(r)
+    return run
+
+
+def _per_spec(fn_name, shape, utc=False):
+    """run for the COL:ARG aggregations: one library call per column,
+    by_q[qid][col] = [shape(row), ...]; ``utc`` computes under
+    _utc_session."""
+    def run(inp, specs, by_q):
+        from searchengine_spark.query import aggregations
+
+        fn = getattr(aggregations, fn_name)
+        attrs = inp.attrs
+        with (_utc_session(inp.hits.sparkSession) if utc
+              else contextlib.nullcontext()):
+            for col, arg in specs:
+                for r in fn(inp.hits, attrs, [col], inp.ext, arg).collect():
+                    by_q[r["query_id"]].setdefault(col, []).append(shape(r))
+    return run
+
+
+@contextlib.contextmanager
+def _utc_session(spark):
+    """Calendar intervals truncate in the SESSION time zone: pin UTC for
+    the compute (restored after the collects) so date buckets are the
+    documented exact UTC civil-calendar boundaries on any host."""
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+
+def _parse_facets(spec, args):
+    """--facets COLS [--facet-approx N_SHARDS:SHARD_SIZE]: ES terms
+    aggregation (query/facets.py); the approximation routes through
+    approx_facet_counts and each bucket also carries "err", its
+    doc_count_error_upper_bound."""
+    approx = None
+    if args.facet_approx:
+        try:
+            ns, ss = (int(v) for v in args.facet_approx.split(":"))
+        except ValueError:
+            raise SystemExit("--facet-approx wants N_SHARDS:SHARD_SIZE")
+        if ns < 1 or ss < 1:
+            raise SystemExit("--facet-approx values must be >= 1")
+        approx = (ns, ss)
+    return _cols(spec), args.n, approx
+
+
+def _run_facets(inp, spec, by_q):
+    from searchengine_spark.query.facets import (
+        approx_facet_counts,
+        facet_counts,
+    )
+
+    cols, k, approx = spec
+    if approx is not None:
+        got = approx_facet_counts(inp.hits, inp.attrs, cols, inp.ext,
+                                  n_shards=approx[0], shard_size=approx[1],
+                                  k=k)
+    else:
+        got = facet_counts(inp.hits, inp.attrs, cols, inp.ext, k=k)
+    for r in sorted(got.collect(),
+                    key=lambda r: (r["query_id"], r["facet"], r["rank"])):
+        bucket = {"value": r["value"], "n": int(r["n"])}
         if approx is not None:
-            n_shards, shard_size = approx
-            got = approx_facet_counts(hits, attrs, cols, ext_cols,
-                                      n_shards=n_shards,
-                                      shard_size=shard_size, k=k).collect()
-        else:
-            got = facet_counts(hits, attrs, cols, ext_cols, k=k).collect()
-        for r in sorted(got, key=lambda r: (r["query_id"], r["facet"],
-                                            r["rank"])):
-            bucket = {"value": r["value"], "n": int(r["n"])}
-            if approx is not None:
-                bucket["err"] = int(r["err"])
-            by_q[r["query_id"]].setdefault(r["facet"], []).append(bucket)
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "facets": by_q[i]}))
+            bucket["err"] = int(r["err"])
+        by_q[r["query_id"]].setdefault(r["facet"], []).append(bucket)
 
 
-def _print_histogram(spark, attrs_path, ext_cols, queries, per_q,
-                     hist_spec) -> None:
-    """--histogram COL:INTERVAL[,...]: ES histogram aggregation over each
-    query's result set (query/aggregations.py) — serving-tier-agnostic
-    like facets (computed from the already-resolved result rows). One
-    JSON line per query: {"query", "histogram": {col: [{bucket, n}]}}."""
-    from searchengine_spark.query.aggregations import histogram_counts
+def _run_top_hits(inp, spec, by_q):
+    """--top-hits N (with --facets): ES top_hits sub-aggregation — under
+    each (facet, value) bucket, the best N hits in retrieval order."""
+    from searchengine_spark.query.facets import top_hits
 
-    specs = []
-    for part in hist_spec.split(","):
-        if ":" not in part:
-            raise SystemExit(f"--histogram expects COL:INTERVAL, got {part!r}")
-        c, iv = part.rsplit(":", 1)
-        specs.append((c.strip(), float(iv)))
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for col, interval in specs:
-            got = histogram_counts(hits, attrs, [col], ext_cols,
-                                   interval=interval).collect()
-            for r in got:
-                by_q[r["query_id"]].setdefault(col, []).append(
-                    {"bucket": r["bucket"], "n": int(r["n"])})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "histogram": by_q[i]}))
+    cols, n = spec
+    for r in top_hits(inp.hits, inp.attrs, cols, inp.ext, n=n).collect():
+        by_q[r["query_id"]].setdefault(f"{r['facet']}={r['value']}", []).append(
+            {c: r[c] for c in inp.ext} | {"score": r["score"]})
 
 
-def _print_geohash_grid(spark, attrs_path, ext_cols, queries, per_q,
-                        geo_spec) -> None:
-    """--geohash-grid LAT,LON:PRECISION[:TOP,LEFT,BOTTOM,RIGHT]: ES
-    geohash_grid aggregation over each query's result set (query/geo.py;
-    micro-degree integer columns, exact-integer encoding) — serving-
-    tier-agnostic like facets. One JSON line per query:
-    {"query", "geohash_grid": [{geohash, n}, ...]}."""
-    from searchengine_spark.query.geo import geohash_grid_agg
-
-    parts = geo_spec.split(":")
+def _parse_geohash(spec, args):
+    """LAT,LON:PRECISION[:TOP,LEFT,BOTTOM,RIGHT] (micro-degree ints)."""
+    parts = spec.split(":")
     if len(parts) not in (2, 3) or "," not in parts[0]:
         raise SystemExit("--geohash-grid wants LAT,LON:PRECISION"
                          "[:TOP,LEFT,BOTTOM,RIGHT]")
     lat_col, lon_col = (c.strip() for c in parts[0].split(",", 1))
-    precision = int(parts[1])
     bbox = None
     if len(parts) == 3:
         try:
@@ -881,67 +1007,386 @@ def _print_geohash_grid(spark, attrs_path, ext_cols, queries, per_q,
             raise SystemExit("--geohash-grid bbox wants four micro-degree "
                              "ints TOP,LEFT,BOTTOM,RIGHT")
         bbox = (top, left, bottom, right)
-    by_q: dict[int, list] = {i: [] for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        got = geohash_grid_agg(hits, attrs, lat_col, lon_col, ext_cols,
-                               precision=precision, bbox=bbox).collect()
-        for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
-            by_q[r["query_id"]].append(
-                {"geohash": r["geohash"], "n": int(r["n"])})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "geohash_grid": by_q[i]}))
+    return lat_col, lon_col, int(parts[1]), bbox
 
 
-def _print_range(spark, attrs_path, ext_cols, queries, per_q,
-                 range_spec) -> None:
-    """--range COL:E1|E2[,...]: ES range aggregation over each query's
-    result set (query/aggregations.py range_agg) — the edges E1..En make
-    the contiguous buckets (*,E1), [E1,E2), ..., [En,*) (from inclusive,
-    to exclusive, every bucket emits incl. n=0 — the ES contract; the
-    library call accepts arbitrary overlapping (from,to) pairs, the CLI
-    sugar is contiguous edges). One JSON line per query:
-    {"query", "range": {col: [{from, to, n}]}}."""
-    from searchengine_spark.query.aggregations import range_agg
+def _run_geohash(inp, spec, by_q):
+    from searchengine_spark.query.geo import geohash_grid_agg
 
-    specs = []
-    for part in range_spec.split(","):
-        if ":" not in part:
-            raise SystemExit(f"--range expects COL:E1|E2|..., got {part!r}")
-        c, es = part.rsplit(":", 1)
+    lat_col, lon_col, precision, bbox = spec
+    got = geohash_grid_agg(inp.hits, inp.attrs, lat_col, lon_col, inp.ext,
+                           precision=precision, bbox=bbox).collect()
+    for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):
+        by_q[r["query_id"]].append({"geohash": r["geohash"], "n": int(r["n"])})
+
+
+def _range_edges(es, part):
+    """E1|E2|... -> the contiguous buckets (*,E1), [E1,E2), ..., [En,*)."""
+    try:
+        edges = [float(x) for x in es.split("|") if x.strip()]
+    except ValueError:
+        raise SystemExit(f"--range wants numeric edges in {part!r}")
+    if not edges or sorted(edges) != edges or len(set(edges)) != len(edges):
+        raise SystemExit(f"--range edges must be strictly increasing "
+                         f"in {part!r}")
+    bounds = [None, *edges, None]
+    return list(zip(bounds[:-1], bounds[1:]))
+
+
+def _num_list(flag, what, conv=int):
+    def parse(vs, part):
         try:
-            edges = [float(x) for x in es.split("|") if x.strip()]
+            return [conv(x) for x in vs.split("|")]
         except ValueError:
-            raise SystemExit(f"--range wants numeric edges in {part!r}")
-        if not edges or sorted(edges) != edges or len(set(edges)) != len(edges):
-            raise SystemExit(f"--range edges must be strictly increasing "
-                             f"in {part!r}")
-        bounds = [None, *edges, None]
-        specs.append((c.strip(),
-                      list(zip(bounds[:-1], bounds[1:]))))
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for col, ranges in specs:
-            got = range_agg(hits, attrs, [col], ext_cols, ranges).collect()
-            for r in got:
-                by_q[r["query_id"]].setdefault(col, []).append(
-                    {"from": r["range_from"], "to": r["range_to"],
-                     "n": int(r["n"])})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "range": by_q[i]}))
+            raise SystemExit(f"{flag} wants {what} in {part!r}")
+    return parse
+
+
+_DENSIFIED_OPS = ("cumsum", "derivative", "moving_sum", "serial_diff")
+
+
+def _pipeline_fn(op, rest):
+    """--pipeline OP[:ARGS] -> buckets frame -> pipeline frame
+    (query/pipeline_aggs.py)."""
+    from searchengine_spark.query import pipeline_aggs as P
+
+    if op == "cumsum":
+        return P.cumulative_sum
+    if op == "derivative":
+        return P.derivative
+    if op == "moving_sum":
+        w, _, sh = rest.partition(":")
+        w, sh = int(w or 3), int(sh or 0)
+        return lambda b: P.moving_sum(b, w, shift=sh)
+    if op == "serial_diff":
+        lag = int(rest or 1)
+        return lambda b: P.serial_diff(b, lag)
+    if op == "bucket_sort":
+        sz, _, fr = rest.partition(":")
+        sz, fr = int(sz or 5), int(fr or 0)
+        return lambda b: P.bucket_sort(b, sz, from_=fr)
+    if op in ("bucket_selector", "bucket_script"):
+        if not rest:
+            raise SystemExit(
+                "--pipeline bucket_selector:PRED needs a SQL predicate "
+                "over (n, bucket_epoch)" if op == "bucket_selector" else
+                "--pipeline bucket_script:EXPR needs a SQL integer "
+                "expression over (n, bucket_epoch)")
+        fn = getattr(P, op)
+        return lambda b: fn(b, rest)
+    if op == "stats_bucket":
+        return P.stats_bucket
+    if op == "percentiles_bucket":
+        pcts = [int(x) for x in rest.split("|")] if rest else (25, 50, 75,
+                                                               100)
+        return lambda b: P.percentiles_bucket(b, pcts)
+    if op == "extreme_buckets":
+        return P.extreme_bucket_keys
+    if op == "normalize":
+        return lambda b: P.normalize_buckets(b, rest or "rescale_0_1")
+    raise SystemExit(f"unknown --pipeline op {op!r}")
+
+
+def _parse_pipeline(spec, args):
+    """--pipeline OP over the --date-histogram buckets: ES pipeline
+    aggregations (query/pipeline_aggs.py). Positional members
+    (cumsum/derivative/moving_sum/serial_diff) run on the DENSIFIED
+    series (zero-filled gaps — the ES min_doc_count=0 requirement);
+    order-statistic members run on the raw buckets. Needs a
+    single-column --date-histogram spec."""
+    from searchengine_spark.query.aggregations import (
+        _CALENDAR_SECONDS,
+        _CALENDAR_TRUNC,
+    )
+
+    dh_spec = args.date_histogram
+    if "," in dh_spec or ":" not in dh_spec:
+        raise SystemExit("--pipeline needs a single-column "
+                         "--date-histogram COL:INTERVAL spec")
+    col, iv = dh_spec.rsplit(":", 1)
+    op, _, rest = spec.partition(":")
+    ival = int(iv) if iv.isdigit() else _CALENDAR_SECONDS.get(iv)
+    if ival:
+        interval = ival
+    elif iv in _CALENDAR_TRUNC:
+        # calendar buckets are fine for every op EXCEPT the densified
+        # positional family (zero-fill needs equally spaced keys)
+        if op in _DENSIFIED_OPS:
+            raise SystemExit(
+                f"--pipeline {op} needs a fixed-span --date-histogram "
+                f"interval (calendar {iv!r} buckets are not equally "
+                f"spaced — densify is undefined)")
+        interval = iv
+    else:
+        raise SystemExit(f"--pipeline cannot resolve interval {iv!r}")
+    return col.strip(), interval, ival, op, _pipeline_fn(op, rest)
+
+
+def _run_pipeline(inp, spec, by_q):
+    from searchengine_spark.query import pipeline_aggs as P
+    from searchengine_spark.query.aggregations import date_histogram_counts
+
+    col, interval, ival, op, fn = spec
+    with _utc_session(inp.hits.sparkSession):
+        buckets = date_histogram_counts(inp.hits, inp.attrs, [col], inp.ext,
+                                        interval=interval)
+        if op in _DENSIFIED_OPS:
+            buckets = P.densify_buckets(buckets, ival)
+        out = fn(buckets)
+        val_cols = [c for c in out.columns if c != "query_id"]
+        for r in out.collect():
+            by_q[r["query_id"]].append(
+                {c: (list(r[c]) if isinstance(r[c], list) else r[c])
+                 for c in val_cols})
+
+
+def _parse_composite(spec, args):
+    """--composite COLS:SIZE [--composite-after V1|V2]: ES composite —
+    the paginated bucket enumerator; after_key feeds back through
+    --composite-after for the next page."""
+    if ":" not in spec:
+        raise SystemExit(f"--composite expects COLS:SIZE, got {spec!r}")
+    cols_part, size_part = spec.rsplit(":", 1)
+    cols = _cols(cols_part)
+    try:
+        size = int(size_part)
+    except ValueError:
+        raise SystemExit(f"--composite SIZE must be an integer, "
+                         f"got {size_part!r}")
+    after = None
+    if args.composite_after is not None:
+        after = args.composite_after.split("|")
+        if len(after) != len(cols):
+            raise SystemExit(f"--composite-after wants one value per "
+                             f"column ({len(cols)}), got {len(after)}")
+    return cols, size, after
+
+
+def _run_composite(inp, spec, by_q):
+    from searchengine_spark.query.aggregations import composite_agg
+
+    cols, size, after = spec
+    attrs = inp.attrs
+    if after is not None:
+        # cursor values compare in the attrs column's NATIVE type
+        dtypes = dict(attrs.dtypes)
+        typed = []
+        for c, v in zip(cols, after):
+            t = dtypes.get(c, "string")
+            if t in ("tinyint", "smallint", "int", "bigint"):
+                typed.append(int(v))
+            elif t in ("float", "double", "decimal"):
+                typed.append(float(v))
+            else:
+                typed.append(v)
+        after = typed
+    for r in composite_agg(inp.hits, attrs, cols, inp.ext, size=size,
+                           after=after).collect():
+        by_q[r["query_id"]].append(
+            {"key": {c: r[c] for c in cols}, "n": int(r["n"])})
+
+
+def _composite_page(buckets, spec):
+    return {"buckets": buckets,
+            "after_key": buckets[-1]["key"] if len(buckets) == spec[1]
+            else None}
+
+
+def _run_matrix_stats(inp, cols, by_q):
+    from searchengine_spark.query.aggregations import matrix_stats_agg
+
+    for r in matrix_stats_agg(inp.hits, inp.attrs, cols, inp.ext).collect():
+        n = int(r["n"])
+        by_q[r["query_id"]].append({
+            "col_a": r["col_a"], "col_b": r["col_b"], "n": n,
+            "cov_num": int(r["cov_num"]),
+            "covariance": (int(r["cov_num"]) / (n * n)) if n else None,
+        })
+
+
+def _parse_weighted_avg(spec, args):
+    parts = spec.split(":")
+    if len(parts) != 2 or not all(p.strip() for p in parts):
+        raise SystemExit("--weighted-avg wants VALUE:WEIGHT")
+    return tuple(p.strip() for p in parts)
+
+
+def _run_weighted_avg(inp, spec, by_q):
+    from searchengine_spark.query.aggregations import weighted_avg_agg
+
+    for r in weighted_avg_agg(inp.hits, inp.attrs, *spec, inp.ext).collect():
+        n, wsum, wtot = int(r["n"]), r["wsum"], r["wtot"]
+        by_q[r["query_id"]] = {
+            "n": n, "wsum": wsum, "wtot": wtot,
+            "value": (wsum / wtot) if wtot else None,
+        }
+
+
+def _parse_top_metrics(spec, args):
+    parts = spec.split(":")
+    if len(parts) < 2 or len(parts) > 4:
+        raise SystemExit("--top-metrics wants SORT:M1[,M2...][:SIZE"
+                         "[:asc|desc]]")
+    order = parts[3].strip().lower() if len(parts) > 3 else "desc"
+    if order not in ("asc", "desc"):
+        raise SystemExit("--top-metrics order must be asc or desc")
+    return (parts[0].strip(), _cols(parts[1]),
+            int(parts[2]) if len(parts) > 2 else 1, order == "asc")
+
+
+def _run_top_metrics(inp, spec, by_q):
+    from searchengine_spark.query.aggregations import top_metrics_agg
+
+    sort_col, metrics, size, ascending = spec
+    out = top_metrics_agg(inp.hits, inp.attrs, sort_col, metrics, inp.ext,
+                          size=size, ascending=ascending)
+    for r in out.collect():
+        by_q[r["query_id"]].append({
+            "pos": int(r["pos"]), "sort": r[sort_col],
+            "metrics": {m: r[m] for m in metrics if m != sort_col},
+        })
+
+
+def _parse_multi_terms(spec, args):
+    parts = spec.split(":")
+    if len(parts) > 2:
+        raise SystemExit("--multi-terms wants COLA,COLB[:SIZE]")
+    return _cols(parts[0]), int(parts[1]) if len(parts) > 1 else 10
+
+
+def _run_multi_terms(inp, spec, by_q):
+    from searchengine_spark.query.aggregations import multi_terms_agg
+
+    cols, size = spec
+    for r in multi_terms_agg(inp.hits, inp.attrs, cols, inp.ext,
+                             size=size).collect():
+        by_q[r["query_id"]].append({
+            "rank": int(r["rank"]), "key": [r[c] for c in cols],
+            "n": int(r["n"]),
+        })
+
+
+def _parse_rank_eval(spec, args):
+    """RATINGS.parquet[:K[:GRADE]] (ratings columns: query, <ext
+    cols...>, grade)."""
+    parts = spec.split(":")
+    if len(parts) > 3 or not parts[0].strip():
+        raise SystemExit("--rank-eval wants RATINGS.parquet[:K[:GRADE]]")
+    return (parts[0].strip(), int(parts[1]) if len(parts) > 1 else 10,
+            int(parts[2]) if len(parts) > 2 else 1)
+
+
+def _run_rank_eval(inp, spec, by_q):
+    """ES _rank_eval (query/eval.py rank_eval): exact count numerators
+    per query; precision@k / recall@k / MRR derive client-side."""
+    from pyspark.sql import functions as F
+
+    from searchengine_spark.query.eval import rank_eval
+
+    path, k, grade = spec
+    spark = inp.hits.sparkSession
+    raw = spark.read.parquet(path)
+    missing = [c for c in ["query", *inp.ext, "grade"]
+               if c not in raw.columns]
+    if missing:
+        raise SystemExit(f"--rank-eval ratings table lacks {missing}")
+    # query text -> this batch's query_id (unrated queries drop)
+    qmap = spark.createDataFrame(
+        list(enumerate(inp.queries)), ["query_id", "query"])
+    ratings = raw.join(F.broadcast(qmap), "query").select(
+        "query_id", *inp.ext, "grade")
+    for r in rank_eval(inp.hits, ratings, inp.ext, k=k,
+                       relevant_grade=grade).collect():
+        n_ret, n_rel = int(r["n_returned"]), int(r["n_rel_ret"])
+        n_tot = int(r["n_rel_total"])
+        frr = r["first_rel_rank"]
+        by_q[r["query_id"]] = {
+            "k": k, "n_returned": n_ret, "n_rel_ret": n_rel,
+            "n_rel_total": n_tot,
+            "precision": (n_rel / n_ret) if n_ret else None,
+            "recall": (n_rel / n_tot) if n_tot else None,
+            "mrr": (1.0 / int(frr)) if frr is not None else 0.0,
+        }
+
+
+def _parse_t_test(spec, args):
+    if ":" not in spec or "|" not in spec.split(":", 1)[1]:
+        raise SystemExit("--t-test wants VALUE:PRED_A|PRED_B")
+    value_col, preds = spec.split(":", 1)
+    pred_a, pred_b = preds.split("|", 1)
+    return value_col.strip(), pred_a.strip(), pred_b.strip()
+
+
+def _run_t_test(inp, spec, by_q):
+    """ES t_test, unpaired: exact BIGINT moments per population, Welch's
+    t derived here."""
+    from searchengine_spark.query.aggregations import t_test_agg
+
+    for r in t_test_agg(inp.hits, inp.attrs, *spec, inp.ext).collect():
+        d = {k: int(r[k]) for k in ("n_a", "sum_a", "sum_sq_a",
+                                    "n_b", "sum_b", "sum_sq_b")}
+        t = None
+        if d["n_a"] > 1 and d["n_b"] > 1:
+            ma, mb = d["sum_a"] / d["n_a"], d["sum_b"] / d["n_b"]
+            va = (d["n_a"] * d["sum_sq_a"] - d["sum_a"] ** 2) / d["n_a"] ** 2
+            vb = (d["n_b"] * d["sum_sq_b"] - d["sum_b"] ** 2) / d["n_b"] ** 2
+            den = math.sqrt(va / d["n_a"] + vb / d["n_b"])
+            t = (ma - mb) / den if den else None
+        d["t"] = t
+        by_q[r["query_id"]] = d
+
+
+def _string_stats(r):
+    n, len_sum = int(r["n"]), int(r["len_sum"])
+    return {
+        "n": n, "len_min": int(r["len_min"]), "len_max": int(r["len_max"]),
+        "len_sum": len_sum, "avg_length": (len_sum / n) if n else None,
+        "entropy_num": int(r["entropy_num"]),
+        # ES emits base-2 Shannon entropy; derive it from the exact
+        # numerator (micro-nats): H = (ln T - num/(1e6 T))/ln 2
+        "entropy": (
+            (math.log(len_sum) - int(r["entropy_num"]) / (1e6 * len_sum))
+            / math.log(2)
+        ) if len_sum else 0.0,
+    }
+
+
+def _extended_stats(r):
+    n = int(r["n"])
+    var = (int(r["var_num"]) / (n * n)) if n else None
+    return {
+        "n": n, "sum": int(r["sum"]), "sum_sq": int(r["sum_sq"]),
+        "var_num": int(r["var_num"]), "variance": var,
+        "std_deviation": (var ** 0.5) if var is not None else None,
+    }
+
+
+def _percentile_rank(r):
+    n_le, n = int(r["n_le"]), int(r["n"])
+    return {"value": r["value"], "n_le": n_le, "n": n,
+            "rank_pct": (100.0 * n_le / n) if n else None}
+
+
+def _parse_auto_date_histogram(spec, args):
+    parts = spec.split(":")
+    if len(parts) > 2:
+        raise SystemExit("--auto-date-histogram wants COL[:TARGET]")
+    return parts[0].strip(), int(parts[1]) if len(parts) > 1 else 10
+
+
+def _run_auto_date_histogram(inp, spec, by_q):
+    from searchengine_spark.query.aggregations import (
+        auto_date_histogram_counts,
+    )
+
+    col, target = spec
+    for r in auto_date_histogram_counts(inp.hits, inp.attrs, [col], inp.ext,
+                                        target_buckets=target).collect():
+        d = by_q[r["query_id"]].setdefault(
+            r["col"], {"interval_sec": int(r["interval_sec"]),
+                       "buckets": []})
+        d["buckets"].append({"epoch": int(r["bucket_epoch"]),
+                             "n": int(r["n"])})
 
 
 def _parse_named_filters(spec: str, flag: str) -> list:
@@ -957,904 +1402,199 @@ def _parse_named_filters(spec: str, flag: str) -> list:
     return out
 
 
-def _print_filters_agg(spark, attrs_path, ext_cols, queries, per_q,
-                       spec) -> None:
-    """--filters-agg "NAME=PRED|NAME=PRED": ES filters aggregation over
-    each query's result set (query/aggregations.py filters_agg) — named
-    SQL predicate buckets, all of them emitting incl. n=0. One JSON line
-    per query: {"query", "filters": {name: n}}."""
+def _run_filters(inp, filters, by_q):
     from searchengine_spark.query.aggregations import filters_agg
 
-    filters = _parse_named_filters(spec, "--filters-agg")
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        got = filters_agg(hits, attrs, filters, ext_cols).collect()
-        for r in got:
-            by_q[r["query_id"]][r["filter_name"]] = int(r["n"])
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "filters": by_q[i]}))
+    for r in filters_agg(inp.hits, inp.attrs, filters, inp.ext).collect():
+        by_q[r["query_id"]][r["filter_name"]] = int(r["n"])
 
 
-def _print_missing(spark, attrs_path, ext_cols, queries, per_q,
-                   spec) -> None:
-    """--missing COL[,COL...]: ES missing aggregation over each query's
-    result set (query/aggregations.py missing_agg) — per column, how
-    many hits have NO value (NULL or absent from the attrs table). One
-    JSON line per query: {"query", "missing": {col: n}}."""
-    from searchengine_spark.query.aggregations import missing_agg
-
-    cols = [c.strip() for c in spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        got = missing_agg(hits, attrs, cols, ext_cols).collect()
-        for r in got:
-            by_q[r["query_id"]][r["col"]] = int(r["n"])
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "missing": by_q[i]}))
-
-
-def _print_rare_terms(spark, attrs_path, ext_cols, queries, per_q,
-                      spec, max_doc_count) -> None:
-    """--rare-terms COL[,COL...] [--rare-max-doc-count N]: ES rare_terms
-    aggregation over each query's result set (query/aggregations.py
-    rare_terms_agg) — the long-tail mirror of --facets, values matched
-    by <= N hits, rarest first. One JSON line per query:
-    {"query", "rare_terms": {col: [{value, n}]}}."""
+def _run_rare_terms(inp, spec, by_q):
     from searchengine_spark.query.aggregations import rare_terms_agg
 
-    cols = [c.strip() for c in spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        got = rare_terms_agg(hits, attrs, cols, ext_cols,
-                             max_doc_count=max_doc_count).collect()
-        for r in got:
-            by_q[r["query_id"]].setdefault(r["facet"], []).append(
-                {"value": r["value"], "n": int(r["n"])})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "rare_terms": by_q[i]}))
+    cols, max_doc_count = spec
+    for r in rare_terms_agg(inp.hits, inp.attrs, cols, inp.ext,
+                            max_doc_count=max_doc_count).collect():
+        by_q[r["query_id"]].setdefault(r["facet"], []).append(
+            {"value": r["value"], "n": int(r["n"])})
 
 
-def _print_adjacency(spark, attrs_path, ext_cols, queries, per_q,
-                     spec) -> None:
-    """--adjacency "NAME=PRED|NAME=PRED": ES adjacency_matrix
-    aggregation over each query's result set (query/aggregations.py
-    adjacency_matrix_agg) — singleton + pairwise-intersection counts of
-    the named predicate sets, non-empty buckets only. One JSON line per
-    query: {"query", "adjacency": {"a": n, "a&b": n}} (the ES '&'
-    composite-key convention)."""
+def _run_adjacency(inp, filters, by_q):
+    """ES adjacency_matrix: singleton + pairwise-intersection counts,
+    'a&b' composite keys (the ES convention)."""
     from searchengine_spark.query.aggregations import adjacency_matrix_agg
 
-    filters = _parse_named_filters(spec, "--adjacency")
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        got = adjacency_matrix_agg(hits, attrs, filters, ext_cols).collect()
-        for r in got:
-            key = (r["key_a"] if r["key_a"] == r["key_b"]
-                   else f"{r['key_a']}&{r['key_b']}")
-            by_q[r["query_id"]][key] = int(r["n"])
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "adjacency": by_q[i]}))
+    for r in adjacency_matrix_agg(inp.hits, inp.attrs, filters,
+                                  inp.ext).collect():
+        key = (r["key_a"] if r["key_a"] == r["key_b"]
+               else f"{r['key_a']}&{r['key_b']}")
+        by_q[r["query_id"]][key] = int(r["n"])
 
 
-def _print_significant_attrs(spark, attrs_path, ext_cols, queries, per_q,
-                             spec, k, min_fg) -> None:
-    """--significant-attrs COL[,COL...]: ES significant_terms over
-    ATTRIBUTE fields (query/significant.py significant_attr_values) —
-    JLH-over-represented attr values of each query's result set vs the
-    whole-corpus background. One JSON line per query:
-    {"query", "significant_attrs": {col: [{value, fg, bg, score}]}}."""
+def _run_significant_attrs(inp, spec, by_q):
     from searchengine_spark.query.significant import significant_attr_values
 
-    cols = [c.strip() for c in spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        got = significant_attr_values(hits, attrs, cols, ext_cols,
-                                      k=k, min_fg=min_fg).collect()
-        for r in sorted(got, key=lambda r: (r["query_id"], r["facet"],
-                                            r["rank"])):
-            by_q[r["query_id"]].setdefault(r["facet"], []).append(
-                {"value": r["value"], "fg": int(r["fg_count"]),
-                 "bg": int(r["bg_count"]), "score": float(r["score"])})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "significant_attrs": by_q[i]}))
+    cols, k, min_fg = spec
+    got = significant_attr_values(inp.hits, inp.attrs, cols, inp.ext,
+                                  k=k, min_fg=min_fg).collect()
+    for r in sorted(got, key=lambda r: (r["query_id"], r["facet"],
+                                        r["rank"])):
+        by_q[r["query_id"]].setdefault(r["facet"], []).append(
+            {"value": r["value"], "fg": int(r["fg_count"]),
+             "bg": int(r["bg_count"]), "score": float(r["score"])})
 
 
-def _print_top_hits(spark, attrs_path, ext_cols, queries, per_q,
-                    facet_spec, n) -> None:
-    """--top-hits N (with --facets): ES top_hits sub-aggregation
-    (query/facets.py top_hits) — under each (facet, value) bucket, the
-    best N hits in the retrieval's own order. One JSON line per
-    query."""
-    from searchengine_spark.query.facets import top_hits
-
-    cols = [c.strip() for c in facet_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols]
-              + [float(r.get("score", 0.0)), int(r.get("rank", 0))])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(
-            rows, ["query_id", *ext_cols, "score", "rank"])
-        attrs = spark.read.parquet(attrs_path)
-        got = top_hits(hits, attrs, cols, ext_cols, n=n).collect()
-        for r in got:
-            key = f"{r['facet']}={r['value']}"
-            by_q[r["query_id"]].setdefault(key, []).append(
-                {c: r[c] for c in ext_cols} | {"score": r["score"]})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "top_hits": by_q[i]}, default=str))
+def _cols_arg(spec, args):
+    return _cols(spec)
 
 
-def _print_date_histogram(spark, attrs_path, ext_cols, queries, per_q,
-                          spec) -> None:
-    """--date-histogram COL:day|hour|minute|SECONDS[,COL:...] (or the
-    calendar intervals week|month|quarter|year — date_trunc buckets): ES
-    date_histogram (query/aggregations.py; BIGINT epoch buckets) over
-    each query's result set. One JSON line per query."""
-    from searchengine_spark.query.aggregations import date_histogram_counts
+#: The result-set aggregations in print order. Every entry but rank_eval
+#: aggregates --attrs columns over the (sampled) hits, so they are also
+#: the flags that need --attrs.
+_AGGS = (
+    _Agg("facets", _parse_facets, _run_facets),
+    _Agg("top_hits", lambda n, args: (_cols(args.facets), n),
+         _run_top_hits, extra=_SCORE_RANK, str_default=True),
+    _Agg("histogram",
+         lambda spec, args: _col_specs(spec, "--histogram", "INTERVAL",
+                                       lambda iv, part: float(iv)),
+         _per_spec("histogram_counts",
+                   lambda r: {"bucket": r["bucket"], "n": int(r["n"])})),
+    _Agg("geohash_grid", _parse_geohash, _run_geohash, empty=list),
+    _Agg("range",
+         lambda spec, args: _col_specs(spec, "--range", "E1|E2|...",
+                                       _range_edges),
+         _per_spec("range_agg",
+                   lambda r: {"from": r["range_from"], "to": r["range_to"],
+                              "n": int(r["n"])})),
+    _Agg("date_histogram",
+         lambda spec, args: _col_specs(
+             spec, "--date-histogram", "INTERVAL",
+             lambda iv, part: int(iv) if iv.isdigit() else iv),
+         _per_spec("date_histogram_counts",
+                   lambda r: {"bucket_epoch": int(r["bucket_epoch"]),
+                              "n": int(r["n"])}, utc=True)),
+    _Agg("pipeline", _parse_pipeline, _run_pipeline, empty=list,
+         str_default=True, finish=lambda v, spec: {spec[3]: v}),
+    _Agg("percentiles",
+         lambda spec, args: _col_specs(
+             spec, "--percentiles", "P1|P2|...",
+             _num_list("--percentiles", "integer percents")),
+         _per_spec("percentiles_agg",
+                   lambda r: {"pct": int(r["pct"]), "value": r["value"]})),
+    _Agg("cardinality", _cols_arg,
+         _by_col("cardinality_agg", lambda r: int(r["n_distinct"]))),
+    _Agg("composite", _parse_composite, _run_composite,
+         empty=list, str_default=True, finish=_composite_page),
+    _Agg("extended_stats", _cols_arg,
+         _by_col("extended_stats_agg", _extended_stats)),
+    _Agg("matrix_stats", _cols_arg, _run_matrix_stats, empty=list),
+    _Agg("weighted_avg", _parse_weighted_avg, _run_weighted_avg),
+    _Agg("top_metrics", _parse_top_metrics, _run_top_metrics,
+         empty=list, str_default=True),
+    _Agg("percentile_ranks",
+         lambda spec, args: _col_specs(
+             spec, "--percentile-ranks", "V1|V2|...",
+             _num_list("--percentile-ranks", "numeric values", float)),
+         _per_spec("percentile_ranks_agg", _percentile_rank)),
+    _Agg("boxplot", _cols_arg,
+         _by_col("boxplot_agg", lambda r: {
+             "min": r["min"], "q1": r["q1"], "q2": r["q2"], "q3": r["q3"],
+             "max": r["max"]})),
+    _Agg("mad", _cols_arg,
+         _by_col("median_absolute_deviation_agg",
+                 lambda r: {"median": r["median"], "mad": r["mad"]})),
+    _Agg("multi_terms", _parse_multi_terms, _run_multi_terms,
+         empty=list, str_default=True),
+    _Agg("rank_eval", _parse_rank_eval, _run_rank_eval, extra=_RANK,
+         page=True),
+    _Agg("t_test", _parse_t_test, _run_t_test),
+    _Agg("string_stats", _cols_arg,
+         _by_col("string_stats_agg", _string_stats)),
+    _Agg("auto_date_histogram",
+         _parse_auto_date_histogram, _run_auto_date_histogram),
+    _Agg("filters_agg",
+         lambda spec, args: _parse_named_filters(spec, "--filters-agg"),
+         _run_filters, key="filters"),
+    _Agg("missing", _cols_arg,
+         _by_col("missing_agg", lambda r: int(r["n"]))),
+    _Agg("rare_terms",
+         lambda spec, args: (_cols(spec), args.rare_max_doc_count),
+         _run_rare_terms),
+    _Agg("adjacency",
+         lambda spec, args: _parse_named_filters(spec, "--adjacency"),
+         _run_adjacency),
+    _Agg("significant_attrs",
+         lambda spec, args: (_cols(spec), args.n, args.sig_min_fg),
+         _run_significant_attrs),
+)
 
-    specs = []
-    for part in spec.split(","):
-        if ":" not in part:
-            raise SystemExit(
-                f"--date-histogram expects COL:INTERVAL, got {part!r}")
-        c, iv = part.rsplit(":", 1)
-        specs.append((c.strip(), int(iv) if iv.isdigit() else iv))
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        # calendar intervals truncate in the SESSION timezone: pin UTC
-        # for the compute (restored after the collects) so buckets are
-        # the documented exact UTC civil-calendar boundaries on any host
-        old_tz = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+#: every flag that reads --attrs in the post-processor
+_ATTRS_AGG_FLAGS = tuple(a.dest for a in _AGGS if not a.page) + (
+    "diversified",)
+
+#: post-processing flags parsed before aggregations run, in order
+_PRE_AGG = (("context", _parse_context), ("sampler", _parse_sampler),
+            ("diversified", _parse_diversified))
+
+
+def _parse_post_specs(args) -> dict:
+    """Parse every post-processing flag that is set, before any Spark
+    work: {dest: parsed value}. A malformed spec exits non-zero with a
+    message naming its flag."""
+    parsers = [*_PRE_AGG, *((a.dest, a.parse) for a in _AGGS)]
+    post = {}
+    for dest, parse in parsers:
+        spec = getattr(args, dest)
+        if not spec:
+            continue
         try:
-            for col, interval in specs:
-                got = date_histogram_counts(hits, attrs, [col], ext_cols,
-                                            interval=interval).collect()
-                for r in got:
-                    by_q[r["query_id"]].setdefault(col, []).append(
-                        {"bucket_epoch": int(r["bucket_epoch"]),
-                         "n": int(r["n"])})
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", old_tz)
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "date_histogram": by_q[i]}))
+            post[dest] = parse(spec, args)
+        except ValueError as e:
+            raise SystemExit(f"--{dest.replace('_', '-')} {spec!r}: {e}")
+    return post
 
 
-def _print_pipeline(spark, attrs_path, ext_cols, queries, per_q,
-                    dh_spec, pipe_spec) -> None:
-    """--pipeline OP over the --date-histogram buckets: ES pipeline
-    aggregations (query/pipeline_aggs.py). OP is one of cumsum,
-    derivative, moving_sum:W[:SHIFT], serial_diff:L,
-    bucket_sort:SIZE[:FROM], bucket_selector:PRED, stats_bucket,
-    bucket_script:EXPR, percentiles_bucket[:P1|P2], extreme_buckets,
-    normalize[:METHOD] (exact integer num/den pairs).
-    Positional members (cumsum/derivative/moving_sum/serial_diff) run on
-    the DENSIFIED series (zero-filled gaps — the ES min_doc_count=0
-    requirement); order-statistic members run on the raw buckets. Needs
-    a single-column --date-histogram spec. One JSON line per query."""
-    from searchengine_spark.query.aggregations import (
-        _CALENDAR_SECONDS, date_histogram_counts)
-    from searchengine_spark.query import pipeline_aggs as P
-
-    if "," in dh_spec or ":" not in dh_spec:
-        raise SystemExit("--pipeline needs a single-column "
-                         "--date-histogram COL:INTERVAL spec")
-    from searchengine_spark.query.aggregations import _CALENDAR_TRUNC
-
-    col, iv = dh_spec.rsplit(":", 1)
-    op, _, rest = pipe_spec.partition(":")
-    densified_ops = ("cumsum", "derivative", "moving_sum", "serial_diff")
-    ival = int(iv) if iv.isdigit() else _CALENDAR_SECONDS.get(iv)
-    if ival:
-        interval = ival
-    elif iv in _CALENDAR_TRUNC:
-        # calendar buckets are fine for every op EXCEPT the densified
-        # positional family (zero-fill needs equally spaced keys)
-        if op in densified_ops:
-            raise SystemExit(
-                f"--pipeline {op} needs a fixed-span --date-histogram "
-                f"interval (calendar {iv!r} buckets are not equally "
-                f"spaced — densify is undefined)")
-        interval = iv
-    else:
-        raise SystemExit(f"--pipeline cannot resolve interval {iv!r}")
-    by_q: dict[int, list] = {i: [] for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        old_tz = spark.conf.get("spark.sql.session.timeZone")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        buckets = date_histogram_counts(hits, attrs, [col.strip()],
-                                        ext_cols, interval=interval)
-        if op in densified_ops:
-            buckets = P.densify_buckets(buckets, ival)
-        if op == "cumsum":
-            out = P.cumulative_sum(buckets)
-        elif op == "derivative":
-            out = P.derivative(buckets)
-        elif op == "moving_sum":
-            w, _, sh = rest.partition(":")
-            out = P.moving_sum(buckets, int(w or 3), shift=int(sh or 0))
-        elif op == "serial_diff":
-            out = P.serial_diff(buckets, int(rest or 1))
-        elif op == "bucket_sort":
-            sz, _, fr = rest.partition(":")
-            out = P.bucket_sort(buckets, int(sz or 5), from_=int(fr or 0))
-        elif op == "bucket_selector":
-            if not rest:
-                raise SystemExit("--pipeline bucket_selector:PRED needs a "
-                                 "SQL predicate over (n, bucket_epoch)")
-            out = P.bucket_selector(buckets, rest)
-        elif op == "stats_bucket":
-            out = P.stats_bucket(buckets)
-        elif op == "bucket_script":
-            if not rest:
-                raise SystemExit("--pipeline bucket_script:EXPR needs a "
-                                 "SQL integer expression over "
-                                 "(n, bucket_epoch)")
-            out = P.bucket_script(buckets, rest)
-        elif op == "percentiles_bucket":
-            pcts = [int(x) for x in rest.split("|")] if rest else (25, 50,
-                                                                   75, 100)
-            out = P.percentiles_bucket(buckets, pcts)
-        elif op == "extreme_buckets":
-            out = P.extreme_bucket_keys(buckets)
-        elif op == "normalize":
-            out = P.normalize_buckets(buckets, rest or "rescale_0_1")
-        else:
-            raise SystemExit(f"unknown --pipeline op {op!r}")
-        val_cols = [c for c in out.columns if c not in ("query_id",)]
-        try:
-            for r in out.collect():
-                by_q[r["query_id"]].append(
-                    {c: (list(r[c]) if isinstance(r[c], list) else r[c])
-                     for c in val_cols})
-        finally:
-            spark.conf.set("spark.sql.session.timeZone", old_tz)
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "pipeline": {op: by_q[i]}},
-                         default=str))
+def _post_process(spark, args, post, cfg, ext_cols, queries, per_q,
+                  pidx=None, shards=None) -> None:
+    """Everything that runs on a batch's resolved result rows, on either
+    tier: texts attach to the rows, then --context and every
+    aggregation print their lines (before the caller prints the results
+    lines). --sampler/--diversified shape AGGREGATION input only —
+    snippets, the ranked page, --rank-eval and relevance stats stay
+    full (ES sampler semantics)."""
+    if args.snippet_source:
+        _attach_texts(spark, args.snippet_source, ext_cols, cfg, queries,
+                      per_q, args.highlight)
+    if "context" in post:
+        _print_context(spark, args.snippet_source, ext_cols, queries, per_q,
+                       post["context"])
+    agg_q = per_q
+    if "sampler" in post:
+        agg_q = [res[:post["sampler"]] for res in agg_q]
+    if "diversified" in post:
+        agg_q = _apply_diversified(spark, args.attrs, ext_cols, agg_q,
+                                   post["diversified"])
+    for agg in _AGGS:
+        if agg.dest in post:
+            _print_agg(spark, agg, post[agg.dest], args.attrs, ext_cols,
+                       queries, per_q if agg.page else agg_q)
+    if args.significant:
+        _print_significant(spark, cfg, queries, agg_q, args.significant,
+                           pidx=pidx, shards=shards)
 
 
-def _print_percentiles(spark, attrs_path, ext_cols, queries, per_q,
-                       pct_spec) -> None:
-    """--percentiles COL:P1|P2|...[,COL:...]: ES percentiles aggregation
-    (query/aggregations.py; EXACT nearest-rank) over each query's result
-    set. One JSON line per query: {"query", "percentiles": {col: [{pct,
-    value}]}}."""
-    from searchengine_spark.query.aggregations import percentiles_agg
-
-    specs = []
-    for part in pct_spec.split(","):
-        if ":" not in part:
-            raise SystemExit(
-                f"--percentiles expects COL:P1|P2|..., got {part!r}")
-        c, ps = part.rsplit(":", 1)
-        try:
-            specs.append((c.strip(), [int(x) for x in ps.split("|")]))
-        except ValueError:
-            raise SystemExit(f"--percentiles wants integer percents in "
-                             f"{part!r}")
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for col, percents in specs:
-            got = percentiles_agg(hits, attrs, [col], ext_cols,
-                                  percents=percents).collect()
-            for r in got:
-                by_q[r["query_id"]].setdefault(col, []).append(
-                    {"pct": int(r["pct"]), "value": r["value"]})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "percentiles": by_q[i]}))
-
-
-def _print_cardinality(spark, attrs_path, ext_cols, queries, per_q,
-                       cols_spec) -> None:
-    """--cardinality COL[,COL...]: ES cardinality aggregation
-    (query/aggregations.py; exact distinct counts, NULLs skipped) over
-    each query's result set. One JSON line per query."""
-    from searchengine_spark.query.aggregations import cardinality_agg
-
-    cols = [c.strip() for c in cols_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in cardinality_agg(hits, attrs, cols, ext_cols).collect():
-            by_q[r["query_id"]][r["col"]] = int(r["n_distinct"])
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "cardinality": by_q[i]}))
-
-
-def _print_composite(spark, attrs_path, ext_cols, queries, per_q,
-                     comp_spec, after_spec) -> None:
-    """--composite COLS:SIZE [--composite-after V1|V2]: ES composite
-    aggregation over each query's result set (query/aggregations.py
-    composite_agg) — the paginated bucket enumerator: distinct tuples of
-    the named attribute columns in lexicographic order, SIZE buckets per
-    page, resuming strictly after the cursor. One JSON line per query:
-    {"query", "composite": {"buckets": [{key: {...}, "n": N}],
-    "after_key": {...}|null}} — feed after_key back via
-    --composite-after to walk the next page."""
-    from searchengine_spark.query.aggregations import composite_agg
-
-    if ":" not in comp_spec:
-        raise SystemExit(f"--composite expects COLS:SIZE, got {comp_spec!r}")
-    cols_part, size_part = comp_spec.rsplit(":", 1)
-    cols = [c.strip() for c in cols_part.split(",") if c.strip()]
-    try:
-        size = int(size_part)
-    except ValueError:
-        raise SystemExit(f"--composite SIZE must be an integer, "
-                         f"got {size_part!r}")
-    attrs = spark.read.parquet(attrs_path)
-    after = None
-    if after_spec is not None:
-        parts = after_spec.split("|")
-        if len(parts) != len(cols):
-            raise SystemExit(f"--composite-after wants one value per "
-                             f"column ({len(cols)}), got {len(parts)}")
-        # cursor values compare in the attrs column's NATIVE type
-        dtypes = dict(attrs.dtypes)
-        after = []
-        for c, v in zip(cols, parts):
-            t = dtypes.get(c, "string")
-            if t in ("tinyint", "smallint", "int", "bigint"):
-                after.append(int(v))
-            elif t in ("float", "double", "decimal"):
-                after.append(float(v))
-            else:
-                after.append(v)
-    by_q: dict[int, list] = {i: [] for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        got = composite_agg(hits, attrs, cols, ext_cols, size=size,
-                            after=after).collect()
-        for r in got:
-            by_q[r["query_id"]].append(
-                {"key": {c: r[c] for c in cols}, "n": int(r["n"])})
-    for i, q in enumerate(queries):
-        buckets = by_q[i]
-        after_key = buckets[-1]["key"] if len(buckets) == size else None
-        print(json.dumps({"query": q, "composite": {
-            "buckets": buckets, "after_key": after_key}}, default=str))
-
-
-def _print_extended_stats(spark, attrs_path, ext_cols, queries, per_q,
-                          cols_spec) -> None:
-    """--extended-stats COL[,COL...]: ES extended_stats analog
-    (query/aggregations.py; BIGINT moments + integer variance numerator;
-    variance/std derive client-side as var_num/n^2). One JSON line per
-    query."""
-    from searchengine_spark.query.aggregations import extended_stats_agg
-
-    cols = [c.strip() for c in cols_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in extended_stats_agg(hits, attrs, cols, ext_cols).collect():
-            n = int(r["n"])
-            var = (int(r["var_num"]) / (n * n)) if n else None
-            by_q[r["query_id"]][r["col"]] = {
-                "n": n, "sum": int(r["sum"]), "sum_sq": int(r["sum_sq"]),
-                "var_num": int(r["var_num"]), "variance": var,
-                "std_deviation": (var ** 0.5) if var is not None else None,
-            }
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "extended_stats": by_q[i]}))
-
-
-def _print_matrix_stats(spark, attrs_path, ext_cols, queries, per_q,
-                        cols_spec) -> None:
-    """--matrix-stats COLA,COLB[,...]: ES matrix_stats covariance analog
-    (query/aggregations.py; pairwise-complete integer covariance
-    numerator; covariance derives client-side as cov_num/n^2). One JSON
-    line per query."""
-    from searchengine_spark.query.aggregations import matrix_stats_agg
-
-    cols = [c.strip() for c in cols_spec.split(",") if c.strip()]
-    by_q: dict[int, list] = {i: [] for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in matrix_stats_agg(hits, attrs, cols, ext_cols).collect():
-            n = int(r["n"])
-            by_q[r["query_id"]].append({
-                "col_a": r["col_a"], "col_b": r["col_b"], "n": n,
-                "cov_num": int(r["cov_num"]),
-                "covariance": (int(r["cov_num"]) / (n * n)) if n else None,
-            })
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "matrix_stats": by_q[i]}))
-
-
-def _print_weighted_avg(spark, attrs_path, ext_cols, queries, per_q,
-                        spec) -> None:
-    """--weighted-avg VALUE:WEIGHT: ES weighted_avg analog
-    (query/aggregations.py; exact wsum/wtot numerator pair; the average
-    derives client-side as wsum/wtot). One JSON line per query."""
-    from searchengine_spark.query.aggregations import weighted_avg_agg
-
-    parts = spec.split(":")
-    if len(parts) != 2 or not all(p.strip() for p in parts):
-        raise SystemExit("--weighted-avg wants VALUE:WEIGHT")
-    value_col, weight_col = (p.strip() for p in parts)
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in weighted_avg_agg(hits, attrs, value_col, weight_col,
-                                  ext_cols).collect():
-            n, wsum, wtot = int(r["n"]), r["wsum"], r["wtot"]
-            by_q[r["query_id"]] = {
-                "n": n, "wsum": wsum, "wtot": wtot,
-                "value": (wsum / wtot) if wtot else None,
-            }
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "weighted_avg": by_q[i]}))
-
-
-def _print_top_metrics(spark, attrs_path, ext_cols, queries, per_q,
-                       spec) -> None:
-    """--top-metrics SORT:M1[,M2...][:SIZE[:asc|desc]]: ES top_metrics
-    analog (query/aggregations.py; the metric values carried by the
-    hits with the extreme sort value, ext-id tiebreak). One JSON line
-    per query."""
-    from searchengine_spark.query.aggregations import top_metrics_agg
-
-    parts = spec.split(":")
-    if len(parts) < 2 or len(parts) > 4:
-        raise SystemExit("--top-metrics wants SORT:M1[,M2...][:SIZE"
-                         "[:asc|desc]]")
-    sort_col = parts[0].strip()
-    metrics = [c.strip() for c in parts[1].split(",") if c.strip()]
-    size = int(parts[2]) if len(parts) > 2 else 1
-    order = parts[3].strip().lower() if len(parts) > 3 else "desc"
-    if order not in ("asc", "desc"):
-        raise SystemExit("--top-metrics order must be asc or desc")
-    by_q: dict[int, list] = {i: [] for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        out = top_metrics_agg(hits, attrs, sort_col, metrics, ext_cols,
-                              size=size, ascending=(order == "asc"))
-        for r in out.collect():
-            by_q[r["query_id"]].append({
-                "pos": int(r["pos"]), "sort": r[sort_col],
-                "metrics": {m: r[m] for m in metrics if m != sort_col},
-            })
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "top_metrics": by_q[i]},
-                         default=str))
-
-
-def _print_percentile_ranks(spark, attrs_path, ext_cols, queries, per_q,
-                            spec) -> None:
-    """--percentile-ranks COL:V1|V2[,COL:...]: ES percentile_ranks
-    analog (query/aggregations.py; exact n_le/n count pairs — the rank
-    percent derives client-side as 100*n_le/n). One JSON line per
-    query."""
-    from searchengine_spark.query.aggregations import percentile_ranks_agg
-
-    specs = []
-    for part in spec.split(","):
-        if ":" not in part:
-            raise SystemExit(
-                f"--percentile-ranks expects COL:V1|V2|..., got {part!r}")
-        c, vs = part.rsplit(":", 1)
-        try:
-            specs.append((c.strip(), [float(x) for x in vs.split("|")]))
-        except ValueError:
-            raise SystemExit(f"--percentile-ranks wants numeric values "
-                             f"in {part!r}")
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for col, values in specs:
-            for r in percentile_ranks_agg(hits, attrs, [col], ext_cols,
-                                          values=values).collect():
-                n_le, n = int(r["n_le"]), int(r["n"])
-                by_q[r["query_id"]].setdefault(col, []).append({
-                    "value": r["value"], "n_le": n_le, "n": n,
-                    "rank_pct": (100.0 * n_le / n) if n else None,
-                })
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "percentile_ranks": by_q[i]}))
-
-
-def _print_boxplot(spark, attrs_path, ext_cols, queries, per_q,
-                   cols_spec) -> None:
-    """--boxplot COL[,COL...]: ES boxplot analog (query/aggregations.py;
-    five-number summary, EXACT nearest-rank quartiles). One JSON line
-    per query."""
-    from searchengine_spark.query.aggregations import boxplot_agg
-
-    cols = [c.strip() for c in cols_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in boxplot_agg(hits, attrs, cols, ext_cols).collect():
-            by_q[r["query_id"]][r["col"]] = {
-                "min": r["min"], "q1": r["q1"], "q2": r["q2"],
-                "q3": r["q3"], "max": r["max"],
-            }
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "boxplot": by_q[i]}))
-
-
-def _print_mad(spark, attrs_path, ext_cols, queries, per_q,
-               cols_spec) -> None:
-    """--mad COL[,COL...]: ES median_absolute_deviation analog
-    (query/aggregations.py; EXACT nearest-rank median of |x - median|).
-    One JSON line per query."""
-    from searchengine_spark.query.aggregations import (
-        median_absolute_deviation_agg,
-    )
-
-    cols = [c.strip() for c in cols_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in median_absolute_deviation_agg(
-                hits, attrs, cols, ext_cols).collect():
-            by_q[r["query_id"]][r["col"]] = {
-                "median": r["median"], "mad": r["mad"]}
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "mad": by_q[i]}))
-
-
-def _print_multi_terms(spark, attrs_path, ext_cols, queries, per_q,
-                       spec) -> None:
-    """--multi-terms COLA,COLB[:SIZE]: ES multi_terms analog
-    (query/aggregations.py; tuple buckets count-desc, value-asc
-    tiebreak, NULL in any source drops the doc). One JSON line per
-    query."""
-    from searchengine_spark.query.aggregations import multi_terms_agg
-
-    parts = spec.split(":")
-    if len(parts) > 2:
-        raise SystemExit("--multi-terms wants COLA,COLB[:SIZE]")
-    cols = [c.strip() for c in parts[0].split(",") if c.strip()]
-    size = int(parts[1]) if len(parts) > 1 else 10
-    by_q: dict[int, list] = {i: [] for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        out = multi_terms_agg(hits, attrs, cols, ext_cols, size=size)
-        for r in out.collect():
-            by_q[r["query_id"]].append({
-                "rank": int(r["rank"]),
-                "key": [r[c] for c in cols],
-                "n": int(r["n"]),
-            })
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "multi_terms": by_q[i]},
-                         default=str))
-
-
-def _apply_sampler(per_q, size):
-    """--sampler N: ES sampler aggregation — each query's AGGREGATION
-    input cut to its N best-ranked hits (rank asc, result order
-    tiebreak — per_q lists are already retrieval-ordered). Driver-side
-    (the page is already collected); composes BEFORE --diversified,
-    exactly ES's sampler > diversified_sampler nesting."""
-    n = int(size)
-    if n < 1:
-        raise SystemExit("--sampler wants a positive size")
-    return [res[:n] for res in per_q]
-
-
-def _apply_diversified(spark, attrs_path, ext_cols, per_q, spec):
-    """--diversified FIELD[:MAX]: ES diversified_sampler — cap each
-    query's result set at MAX hits per FIELD value (best-ranked survive,
-    ext-id tiebreak, NULL-field hits always pass) BEFORE the other
-    aggregation printers run, so every --facets/--histogram/... flag
-    aggregates over the SAMPLE — exactly ES's sampler>sub-agg nesting.
-    Returns the filtered per_q lists; the printed results are untouched
-    (the sampler shapes aggregation input, not the ranked page)."""
-    from searchengine_spark.query.aggregations import diversified_sample
-
-    parts = spec.split(":")
-    if len(parts) > 2 or not parts[0].strip():
-        raise SystemExit("--diversified wants FIELD[:MAX]")
-    field = parts[0].strip()
-    maxv = int(parts[1]) if len(parts) > 1 else 1
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols] + [r["rank"]])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if not rows:
-        return per_q
-    hits = spark.createDataFrame(rows, ["query_id", *ext_cols, "rank"])
-    attrs = spark.read.parquet(attrs_path)
-    kept = diversified_sample(hits, attrs, field, ext_cols,
-                              max_per_value=maxv)
-    keep = {(r["query_id"], tuple(r[c] for c in ext_cols))
-            for r in kept.collect()}
-    return [
-        [r for r in res
-         if (i, tuple(r[c] for c in ext_cols)) in keep]
-        for i, res in enumerate(per_q)
-    ]
-
-
-def _print_rank_eval(spark, ext_cols, queries, per_q, spec) -> None:
-    """--rank-eval RATINGS.parquet[:K[:GRADE]]: ES _rank_eval analog
-    (query/eval.py rank_eval; ratings parquet columns: query, <ext
-    cols...>, grade). Exact count numerators per query; precision@k /
-    recall@k / MRR derive client-side. One JSON line per query."""
-    from pyspark.sql import functions as F
-
-    from searchengine_spark.query.eval import rank_eval
-
-    parts = spec.split(":")
-    if len(parts) > 3 or not parts[0].strip():
-        raise SystemExit("--rank-eval wants RATINGS.parquet[:K[:GRADE]]")
-    path = parts[0].strip()
-    k = int(parts[1]) if len(parts) > 1 else 10
-    grade = int(parts[2]) if len(parts) > 2 else 1
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols] + [r["rank"]])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    if rows:
-        results = spark.createDataFrame(
-            rows, ["query_id", *ext_cols, "rank"])
-        raw = spark.read.parquet(path)
-        need = ["query", *ext_cols, "grade"]
-        missing = [c for c in need if c not in raw.columns]
-        if missing:
-            raise SystemExit(f"--rank-eval ratings table lacks {missing}")
-        # query text -> this batch's query_id (unrated queries drop)
-        qmap = spark.createDataFrame(
-            list(enumerate(queries)), ["query_id", "query"])
-        ratings = raw.join(F.broadcast(qmap), "query").select(
-            "query_id", *ext_cols, "grade")
-        out = rank_eval(results, ratings, ext_cols, k=k,
-                        relevant_grade=grade)
-        for r in out.collect():
-            n_ret, n_rel = int(r["n_returned"]), int(r["n_rel_ret"])
-            n_tot = int(r["n_rel_total"])
-            frr = r["first_rel_rank"]
-            by_q[r["query_id"]] = {
-                "k": k, "n_returned": n_ret, "n_rel_ret": n_rel,
-                "n_rel_total": n_tot,
-                "precision": (n_rel / n_ret) if n_ret else None,
-                "recall": (n_rel / n_tot) if n_tot else None,
-                "mrr": (1.0 / int(frr)) if frr is not None else 0.0,
-            }
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "rank_eval": by_q[i]}))
-
-
-def _print_t_test(spark, attrs_path, ext_cols, queries, per_q,
-                  spec) -> None:
-    """--t-test VALUE:PRED_A|PRED_B: ES t_test analog (unpaired;
-    query/aggregations.py; exact BIGINT moments per population —
-    Welch's t derives client-side). One JSON line per query."""
-    import math as _math
-
-    from searchengine_spark.query.aggregations import t_test_agg
-
-    if ":" not in spec or "|" not in spec.split(":", 1)[1]:
-        raise SystemExit("--t-test wants VALUE:PRED_A|PRED_B")
-    value_col, preds = spec.split(":", 1)
-    pred_a, pred_b = preds.split("|", 1)
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in t_test_agg(hits, attrs, value_col.strip(),
-                            pred_a.strip(), pred_b.strip(),
-                            ext_cols).collect():
-            d = {k: int(r[k]) for k in ("n_a", "sum_a", "sum_sq_a",
-                                        "n_b", "sum_b", "sum_sq_b")}
-            t = None
-            if d["n_a"] > 1 and d["n_b"] > 1:
-                ma, mb = d["sum_a"] / d["n_a"], d["sum_b"] / d["n_b"]
-                va = (d["n_a"] * d["sum_sq_a"] - d["sum_a"] ** 2) / d["n_a"] ** 2
-                vb = (d["n_b"] * d["sum_sq_b"] - d["sum_b"] ** 2) / d["n_b"] ** 2
-                den = _math.sqrt(va / d["n_a"] + vb / d["n_b"])
-                t = (ma - mb) / den if den else None
-            d["t"] = t
-            by_q[r["query_id"]] = d
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "t_test": by_q[i]}))
-
-
-def _print_string_stats(spark, attrs_path, ext_cols, queries, per_q,
-                        cols_spec) -> None:
-    """--string-stats COL[,COL...]: ES string_stats analog
-    (query/aggregations.py; exact code-point length stats, avg_length
-    derives as len_sum/n; entropy derives from the exact integer
-    micro-nat numerator). One JSON line per query."""
-    import math as _math
-
-    from searchengine_spark.query.aggregations import string_stats_agg
-
-    cols = [c.strip() for c in cols_spec.split(",") if c.strip()]
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        for r in string_stats_agg(hits, attrs, cols, ext_cols).collect():
-            n = int(r["n"])
-            by_q[r["query_id"]][r["col"]] = {
-                "n": n, "len_min": int(r["len_min"]),
-                "len_max": int(r["len_max"]),
-                "len_sum": int(r["len_sum"]),
-                "avg_length": (int(r["len_sum"]) / n) if n else None,
-                "entropy_num": int(r["entropy_num"]),
-                # ES emits base-2 Shannon entropy; derive it from the
-                # exact numerator (micro-nats): H = (ln T - num/(1e6 T))/ln 2
-                "entropy": (
-                    (_math.log(int(r["len_sum"]))
-                     - int(r["entropy_num"]) / (1e6 * int(r["len_sum"])))
-                    / _math.log(2)
-                ) if int(r["len_sum"]) else 0.0,
-            }
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "string_stats": by_q[i]}))
-
-
-def _print_auto_date_histogram(spark, attrs_path, ext_cols, queries,
-                               per_q, spec) -> None:
-    """--auto-date-histogram COL[:TARGET]: ES auto_date_histogram analog
-    (query/aggregations.py; smallest fixed-span ladder rung fitting
-    TARGET buckets, integer-div epoch bucketing — rung can differ per
-    query). One JSON line per query."""
-    from searchengine_spark.query.aggregations import (
-        auto_date_histogram_counts,
-    )
-
-    parts = spec.split(":")
-    if len(parts) > 2:
-        raise SystemExit("--auto-date-histogram wants COL[:TARGET]")
-    col = parts[0].strip()
-    target = int(parts[1]) if len(parts) > 1 else 10
-    by_q: dict[int, dict] = {i: {} for i in range(len(queries))}
-    rows = [
-        tuple([i] + [r[c] for c in ext_cols])
-        for i, res in enumerate(per_q)
-        for r in res
-    ]
-    if rows:
-        hits = spark.createDataFrame(rows, ["query_id", *ext_cols])
-        attrs = spark.read.parquet(attrs_path)
-        out = auto_date_histogram_counts(hits, attrs, [col], ext_cols,
-                                         target_buckets=target)
-        for r in out.collect():
-            d = by_q[r["query_id"]].setdefault(
-                r["col"], {"interval_sec": int(r["interval_sec"]),
-                           "buckets": []})
-            d["buckets"].append({"epoch": int(r["bucket_epoch"]),
-                                 "n": int(r["n"])})
-    for i, q in enumerate(queries):
-        print(json.dumps({"query": q, "auto_date_histogram": by_q[i]}))
+def _add_stats(stats, ext_cols, queries, per_q, dt) -> None:
+    """--relevance: feed each query's ranked ids to EvalStats."""
+    if stats is None:
+        return
+    for q, res in zip(queries, per_q):
+        stats.add(
+            q,
+            [(r[ext_cols[0]] if ext_cols else r["doc_id"],
+              r.get("score", 0.0)) for r in res],
+            search_time=dt / max(len(queries), 1),
+        )
 
 
 def _print_significant(spark, cfg, queries, per_q, k_terms,
@@ -2036,7 +1776,7 @@ def _parse_span_abc(spec: str):
     return parts[0], parts[1], parts[2], int(w) if w else 8
 
 
-def _serve_federated(spark, args) -> None:
+def _serve_federated(spark, args, post) -> None:
     """--shards: scatter-gather across N shard indexes, no merge — every
     ranker family federates (bm25/tfidf/*_optimized/boolean/phrase/
     minspan), plus suggest/fuzzy (federation-global dictionary),
@@ -2080,19 +1820,8 @@ def _serve_federated(spark, args) -> None:
     if args.sort and args.serve_mode == "local":
         raise SystemExit("--sort runs on the distributed tier "
                          "(serve-mode auto/spark)")
-    if (args.filter or args.boost or args.facets or args.histogram
-            or args.sort
-            or args.date_histogram or args.range or args.composite
-            or args.extended_stats or args.matrix_stats
-            or args.weighted_avg or args.top_metrics
-            or args.percentile_ranks or args.boxplot or args.mad
-            or args.multi_terms or args.t_test or args.string_stats
-            or args.auto_date_histogram or args.diversified
-            or args.percentiles or args.cardinality or args.filters_agg
-            or args.missing or args.rare_terms or args.adjacency
-            or args.geohash_grid
-            or args.significant_attrs) and not args.attrs:
-        raise SystemExit("--filter/--boost/--facets/--histogram need --attrs")
+    if (args.filter or args.boost) and not args.attrs:
+        raise SystemExit("--filter/--boost need --attrs")
     t0 = time.perf_counter()
     shards = [load_packed_index(spark, p, snapshot=seq)
               for p, seq in parse_shard_specs(
@@ -2131,116 +1860,6 @@ def _serve_federated(spark, args) -> None:
                          default=str))
         return
 
-    def _record(batch: list[str], per_q: list[list], dt: float) -> None:
-        """Shared post-processing: snippets + relevance stats (the same
-        consumers the single-index path has — both operate on resolved
-        result dicts, so they are serving-tier-agnostic)."""
-        if args.snippet_source:
-            if args.highlight:
-                _attach_highlights(spark, args.snippet_source, shards[0],
-                                   cfg, batch, per_q)
-            _attach_snippets(spark, args.snippet_source, shards[0], cfg,
-                             batch, per_q)
-        # ES sampler semantics: --diversified shapes AGGREGATION input
-        # only — snippets and relevance stats stay on the full page
-        agg_q = per_q
-        if args.sampler:
-            agg_q = _apply_sampler(agg_q, args.sampler)
-        if args.diversified:
-            agg_q = _apply_diversified(spark, args.attrs, ext_cols,
-                                       agg_q, args.diversified)
-        if args.facets:
-            _print_facets(spark, args.attrs, ext_cols, batch, agg_q,
-                          args.facets, args.n, approx=_facet_approx(args))
-            if args.top_hits:
-                _print_top_hits(spark, args.attrs, ext_cols, batch, agg_q,
-                                args.facets, args.top_hits)
-        if args.histogram:
-            _print_histogram(spark, args.attrs, ext_cols, batch, agg_q,
-                             args.histogram)
-        if args.geohash_grid:
-            _print_geohash_grid(spark, args.attrs, ext_cols, batch, agg_q,
-                                args.geohash_grid)
-        if args.range:
-            _print_range(spark, args.attrs, ext_cols, batch, agg_q,
-                         args.range)
-        if args.date_histogram:
-            _print_date_histogram(spark, args.attrs, ext_cols, batch, agg_q,
-                                  args.date_histogram)
-            if args.pipeline:
-                _print_pipeline(spark, args.attrs, ext_cols, batch, agg_q,
-                                args.date_histogram, args.pipeline)
-        if args.percentiles:
-            _print_percentiles(spark, args.attrs, ext_cols, batch, agg_q,
-                               args.percentiles)
-        if args.cardinality:
-            _print_cardinality(spark, args.attrs, ext_cols, batch, agg_q,
-                               args.cardinality)
-        if args.composite:
-            _print_composite(spark, args.attrs, ext_cols, batch, agg_q,
-                             args.composite, args.composite_after)
-        if args.extended_stats:
-            _print_extended_stats(spark, args.attrs, ext_cols, batch, agg_q,
-                                  args.extended_stats)
-        if args.matrix_stats:
-            _print_matrix_stats(spark, args.attrs, ext_cols, batch, agg_q,
-                                args.matrix_stats)
-        if args.weighted_avg:
-            _print_weighted_avg(spark, args.attrs, ext_cols, batch, agg_q,
-                                args.weighted_avg)
-        if args.top_metrics:
-            _print_top_metrics(spark, args.attrs, ext_cols, batch, agg_q,
-                               args.top_metrics)
-        if args.percentile_ranks:
-            _print_percentile_ranks(spark, args.attrs, ext_cols, batch,
-                                    agg_q, args.percentile_ranks)
-        if args.boxplot:
-            _print_boxplot(spark, args.attrs, ext_cols, batch, agg_q,
-                           args.boxplot)
-        if args.mad:
-            _print_mad(spark, args.attrs, ext_cols, batch, agg_q,
-                       args.mad)
-        if args.multi_terms:
-            _print_multi_terms(spark, args.attrs, ext_cols, batch, agg_q,
-                               args.multi_terms)
-        if args.rank_eval:
-            _print_rank_eval(spark, ext_cols, batch, per_q, args.rank_eval)
-        if args.t_test:
-            _print_t_test(spark, args.attrs, ext_cols, batch, agg_q,
-                          args.t_test)
-        if args.string_stats:
-            _print_string_stats(spark, args.attrs, ext_cols, batch, agg_q,
-                                args.string_stats)
-        if args.auto_date_histogram:
-            _print_auto_date_histogram(spark, args.attrs, ext_cols, batch,
-                                       agg_q, args.auto_date_histogram)
-        if args.filters_agg:
-            _print_filters_agg(spark, args.attrs, ext_cols, batch, agg_q,
-                               args.filters_agg)
-        if args.missing:
-            _print_missing(spark, args.attrs, ext_cols, batch, agg_q,
-                           args.missing)
-        if args.rare_terms:
-            _print_rare_terms(spark, args.attrs, ext_cols, batch, agg_q,
-                              args.rare_terms, args.rare_max_doc_count)
-        if args.adjacency:
-            _print_adjacency(spark, args.attrs, ext_cols, batch, agg_q,
-                             args.adjacency)
-        if args.significant_attrs:
-            _print_significant_attrs(spark, args.attrs, ext_cols, batch,
-                                     agg_q, args.significant_attrs,
-                                     args.n, args.sig_min_fg)
-        if args.significant:
-            _print_significant(spark, cfg, batch, agg_q, args.significant,
-                               shards=shards)
-        if stats is not None:
-            for q, res in zip(batch, per_q):
-                stats.add(
-                    q,
-                    [(r[ext_cols[0]] if ext_cols else r["doc_id"],
-                      r.get("score", 0.0)) for r in res],
-                    search_time=dt / max(len(batch), 1),
-                )
     print(f"{len(shards)} shards loaded in "
           f"{(time.perf_counter() - t0) * 1000:.1f}ms ({n_docs} docs)",
           file=sys.stderr)
@@ -2496,7 +2115,9 @@ def _serve_federated(spark, args) -> None:
                 regexp=args.regexp,
             )
         dt = time.perf_counter() - t1
-        _record([q], [res], dt)
+        _post_process(spark, args, post, cfg, ext_cols, [q], [res],
+                      shards=shards)
+        _add_stats(stats, ext_cols, [q], [res], dt)
         print(json.dumps({"query": q, "results": res}, default=str))
         print(f"federated local search in {dt * 1000:.1f}ms "
               f"({len(shards)} shards)", file=sys.stderr)
@@ -2787,7 +2408,9 @@ def _serve_federated(spark, args) -> None:
             sorted(by_q.get(i, []), key=lambda r: (r["rank"], r["doc_id"]))
             for i in range(len(batch))
         ]
-        _record(batch, per_q, dt)
+        _post_process(spark, args, post, cfg, ext_cols, batch, per_q,
+                      shards=shards)
+        _add_stats(stats, ext_cols, batch, per_q, dt)
         for q, res in zip(batch, per_q):
             print(json.dumps({"query": q, "results": res}, default=str))
         print(f"federated search in {dt * 1000:.1f}ms "
@@ -3523,16 +3146,11 @@ def main() -> None:
     if args.pipeline and not args.date_histogram:
         raise SystemExit("--pipeline rides --date-histogram (name the "
                          "bucketing there)")
-    if (args.facets or args.histogram or args.date_histogram
-            or args.range or args.composite
-            or args.extended_stats or args.matrix_stats
-            or args.weighted_avg or args.top_metrics
-            or args.percentile_ranks or args.boxplot or args.mad
-            or args.multi_terms or args.t_test or args.string_stats
-            or args.auto_date_histogram or args.diversified
-            or args.percentiles or args.cardinality or args.filters_agg
-            or args.missing or args.rare_terms or args.adjacency
-            or args.significant_attrs or args.geohash_grid) and not args.attrs:
+    if args.facet_approx and not args.facets:
+        raise SystemExit("--facet-approx rides --facets (name the bucket "
+                         "columns there)")
+    post = _parse_post_specs(args)
+    if any(getattr(args, f) for f in _ATTRS_AGG_FLAGS) and not args.attrs:
         raise SystemExit("--facets/--histogram need --attrs (the table "
                          "carrying the index's order_cols + the "
                          "aggregated columns)")
@@ -3555,7 +3173,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
 
     if args.shards:
-        _serve_federated(spark, args)
+        _serve_federated(spark, args, post)
         return
 
     if args.multi_match:
@@ -3997,6 +3615,8 @@ def main() -> None:
         print(f"local serving snapshot in {(time.perf_counter() - t1) * 1000:.0f}ms",
               file=sys.stderr)
 
+    ext_cols = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
+
     def serve(queries: list[str]) -> None:
         t1 = time.perf_counter()
         if local is not None:
@@ -4072,146 +3692,14 @@ def main() -> None:
                                  constant_score=args.constant_score,
                                  max_cost=args.max_query_cost,
                                  rescore_spec=_rescore_spec(args))
-        if args.snippet_source:
-            if args.highlight:
-                _attach_highlights(spark, args.snippet_source, pidx, cfg,
-                                   queries, per_q)
-            _attach_snippets(spark, args.snippet_source, pidx, cfg,
-                             queries, per_q)
-        if args.context:
-            _print_context(spark, args.snippet_source, pidx, queries,
-                           per_q, args.context)
-        # ES sampler semantics: --diversified shapes AGGREGATION input
-        # only — snippets, the ranked page and relevance stats stay full
-        agg_q = per_q
-        if args.sampler:
-            agg_q = _apply_sampler(agg_q, args.sampler)
-        if args.diversified:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            agg_q = _apply_diversified(spark, args.attrs, ext,
-                                       agg_q, args.diversified)
-        if args.facets:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_facets(spark, args.attrs, ext, queries, agg_q,
-                          args.facets, args.n, approx=_facet_approx(args))
-            if args.top_hits:
-                _print_top_hits(spark, args.attrs, ext, queries, agg_q,
-                                args.facets, args.top_hits)
-        if args.histogram:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_histogram(spark, args.attrs, ext, queries, agg_q,
-                             args.histogram)
-        if args.geohash_grid:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_geohash_grid(spark, args.attrs, ext, queries, agg_q,
-                                args.geohash_grid)
-        if args.range:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_range(spark, args.attrs, ext, queries, agg_q,
-                         args.range)
-        if args.date_histogram:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_date_histogram(spark, args.attrs, ext, queries, agg_q,
-                                  args.date_histogram)
-            if args.pipeline:
-                _print_pipeline(spark, args.attrs, ext, queries, agg_q,
-                                args.date_histogram, args.pipeline)
-        if args.percentiles:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_percentiles(spark, args.attrs, ext, queries, agg_q,
-                               args.percentiles)
-        if args.cardinality:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_cardinality(spark, args.attrs, ext, queries, agg_q,
-                               args.cardinality)
-        if args.composite:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_composite(spark, args.attrs, ext, queries, agg_q,
-                             args.composite, args.composite_after)
-        if args.extended_stats:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_extended_stats(spark, args.attrs, ext, queries, agg_q,
-                                  args.extended_stats)
-        if args.matrix_stats:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_matrix_stats(spark, args.attrs, ext, queries, agg_q,
-                                args.matrix_stats)
-        if args.weighted_avg:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_weighted_avg(spark, args.attrs, ext, queries, agg_q,
-                                args.weighted_avg)
-        if args.top_metrics:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_top_metrics(spark, args.attrs, ext, queries, agg_q,
-                               args.top_metrics)
-        if args.percentile_ranks:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_percentile_ranks(spark, args.attrs, ext, queries,
-                                    agg_q, args.percentile_ranks)
-        if args.boxplot:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_boxplot(spark, args.attrs, ext, queries, agg_q,
-                           args.boxplot)
-        if args.mad:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_mad(spark, args.attrs, ext, queries, agg_q, args.mad)
-        if args.multi_terms:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_multi_terms(spark, args.attrs, ext, queries, agg_q,
-                               args.multi_terms)
-        if args.rank_eval:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_rank_eval(spark, ext, queries, per_q, args.rank_eval)
-        if args.t_test:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_t_test(spark, args.attrs, ext, queries, agg_q,
-                          args.t_test)
-        if args.string_stats:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_string_stats(spark, args.attrs, ext, queries, agg_q,
-                                args.string_stats)
-        if args.auto_date_histogram:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_auto_date_histogram(spark, args.attrs, ext, queries,
-                                       agg_q, args.auto_date_histogram)
-        if args.filters_agg:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_filters_agg(spark, args.attrs, ext, queries, agg_q,
-                               args.filters_agg)
-        if args.missing:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_missing(spark, args.attrs, ext, queries, agg_q,
-                           args.missing)
-        if args.rare_terms:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_rare_terms(spark, args.attrs, ext, queries, agg_q,
-                              args.rare_terms, args.rare_max_doc_count)
-        if args.adjacency:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_adjacency(spark, args.attrs, ext, queries, agg_q,
-                             args.adjacency)
-        if args.significant_attrs:
-            ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-            _print_significant_attrs(spark, args.attrs, ext, queries, agg_q,
-                                     args.significant_attrs, args.n,
-                                     args.sig_min_fg)
-        if args.significant:
-            _print_significant(spark, cfg, queries, agg_q, args.significant,
-                               pidx=pidx)
+        _post_process(spark, args, post, cfg, ext_cols, queries, per_q,
+                      pidx=pidx)
         dt = time.perf_counter() - t1
         for q, res in zip(queries, per_q):
             print(json.dumps({"query": q, "results": res}, default=str))
         print(f"search in {dt * 1000:.1f}ms ({len(queries)} queries)",
               file=sys.stderr)
-        if stats is not None:
-            for q, res in zip(queries, per_q):
-                ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
-                stats.add(
-                    q,
-                    [(r[ext[0]] if ext else r["doc_id"], r.get("score", 0.0))
-                     for r in res],
-                    search_time=dt / max(len(queries), 1),
-                )
+        _add_stats(stats, ext_cols, queries, per_q, dt)
 
     if args.query:
         serve(args.query)

@@ -16,8 +16,9 @@ like the dl_norm payload already denormalizes document length:
     doc_attrs.json        {cols: {name: type}, chunk_docs, n_docs}
 
 Chunk c's array holds the values of doc ids [c·chunk_docs,
-(c+1)·chunk_docs) in DENSE doc-id order (docIDs are dense by
-construction, indexing/docids.py), so value lookup is
+(c+1)·chunk_docs), capped at the doc-id high-water mark, in dense
+doc-id order (ids missing from the docmap — compaction holes — hold
+NULL), so value lookup is
 ``element_at(arr, doc_id - c·chunk_docs + 1)`` — array position, no
 key comparison. One row per chunk means the whole sidecar is
 n_docs/chunk_docs rows (~33k rows for 8.4M docs at chunk 256): serving
@@ -77,7 +78,9 @@ def write_attrs_sidecar(
     keyed by the index's external-id columns). One build-time exchange —
     docmap⋈attrs on the external keys, then a chunk groupBy — amortizes
     every future sort/decay/fvf query's per-batch attrs join. Returns
-    the sidecar manifest dict. Overwrites any existing sidecar."""
+    the sidecar manifest dict. Overwrites any existing sidecar; an attrs
+    table with duplicate external keys is refused before anything is
+    written."""
     ext = [c for c in pidx.manifest["order_cols"] if c != "doc_id"]
     lacks = [c for c in ext if c not in attrs.columns]
     if lacks:
@@ -89,8 +92,18 @@ def write_attrs_sidecar(
     bad = [c for c in cols if c in ("doc_id", "chunk")]
     if bad:
         raise ValueError(f"reserved column names {bad}")
+    dup = (attrs.select(*ext).dropna().groupBy(*ext).count()
+           .where(F.col("count") > 1).limit(1).collect())
+    if dup:
+        # a duplicated key fans the LEFT join out: its doc would hold two
+        # values, so refuse before anything is written
+        raise ValueError(
+            f"attrs table has duplicate external keys on {ext} (e.g. "
+            f"{dict((c, dup[0][c]) for c in ext)} appears "
+            f"{dup[0]['count']} times) — deduplicate it first")
     spark = pidx.spark
     chunk_docs = int(pidx.manifest["chunk_docs"])
+    n_docs = int(pidx.manifest["n_docs"])
     joined = pidx.docmap.join(
         attrs.select(*ext, *cols, F.lit(1).alias("_hit")), ext, "left"
     ).select(F.col("doc_id").cast("long").alias("doc_id"), "_hit", *cols)
@@ -100,8 +113,15 @@ def write_attrs_sidecar(
     joined = joined.observe(
         obs, F.count(F.lit(1)).alias("n"), F.count("_hit").alias("n_matched")
     ).drop("_hit")
+    # a dense doc-id range up to the high-water mark, left-joined onto
+    # the docmap⋈attrs rows: ids absent from the docmap (compaction
+    # holes) become NULL rows, so chunk c's sorted array holds exactly
+    # one value per id of [c·chunk_docs, (c+1)·chunk_docs) and no value
+    # shifts onto a neighbour's slot
+    dense = spark.range(n_docs).withColumnRenamed("id", "doc_id").join(
+        joined, "doc_id", "left")
     packed = (
-        joined.select(
+        dense.select(
             (F.col("doc_id") / F.lit(chunk_docs)).cast("long").alias("chunk"),
             F.struct("doc_id", *cols).alias("_s"),
         )

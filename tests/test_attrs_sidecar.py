@@ -8,7 +8,7 @@ over-budget fallback path stays correct."""
 import pytest
 from pyspark.sql import functions as F
 
-from searchengine_spark.fixtures import transcripts_df
+from searchengine_spark.fixtures import STOP_WORDS_PATH, transcripts_df
 from searchengine_spark.indexing.attrs import (
     attach_attr,
     has_attr,
@@ -27,8 +27,10 @@ QUERIES = ["greatest rock album", "guitar solo drum"]
 
 
 @pytest.fixture(scope="module")
-def cfg(stop_words):
-    return TokenizerConfig(min_token_length=3, stop_words=stop_words)
+def cfg():
+    return TokenizerConfig(
+        min_token_length=3,
+        stop_words=TokenizerConfig.load_stop_words(STOP_WORDS_PATH))
 
 
 @pytest.fixture(scope="module")
@@ -215,3 +217,62 @@ def test_fsck_covers_doc_attrs(pidx, spark, monkeypatch):
     finally:
         fsio.write_text(spark, aman_path, orig)
     assert verify_index(spark, pidx.path)["ok"]
+
+
+def _small_index(spark, cfg, path):
+    corpus = transcripts_df(spark, n_conv=4)
+    build_packed_index(corpus, cfg, path, chunk_docs=64)
+    attrs = corpus.select(
+        "conv_id", "turn_idx", F.length("text").cast("long").alias("n_chars"))
+    return corpus, attrs
+
+
+def test_sidecar_after_compaction_reads_each_docs_own_value(
+        spark, cfg, tmp_path):
+    """Compaction leaves holes in the docmap (doc ids are never
+    renumbered): every live doc must still read its own value, not a
+    neighbour's, and the lookup must not fail under ANSI mode. One
+    delete empties the whole of chunk 1; the sidecar still covers it,
+    so fsck finds one value per doc id up to the high-water mark."""
+    from searchengine_spark.indexing.compact import compact_index
+    from searchengine_spark.indexing.deletes import delete_docs
+    from searchengine_spark.indexing.fsck import verify_index
+
+    path = str(tmp_path / "idx")
+    _, attrs = _small_index(spark, cfg, path)
+    assert int(load_packed_index(spark, path).manifest["n_docs"]) > 128
+    delete_docs(spark, path,
+                where="doc_id % 20 = 7 OR (doc_id >= 64 AND doc_id < 128)")
+    compact_index(spark, path)
+    p = load_packed_index(spark, path)
+    assert p.docmap.count() < int(p.manifest["n_docs"])  # holes exist
+    assert p.docmap.filter("doc_id >= 64 AND doc_id < 128").count() == 0
+    write_attrs_sidecar(p, attrs, ["n_chars"])
+    rep = verify_index(spark, path)
+    assert rep["ok"], rep["errors"]
+    assert rep["checks"]["doc_attrs_values"] == int(p.manifest["n_docs"])
+    ext = [c for c in p.manifest["order_cols"] if c != "doc_id"]
+    side = attach_attr(p, p.docmap.select("doc_id"), "n_chars", alias="v")
+    lake = p.docmap.join(attrs, ext, "left").select(
+        "doc_id", F.col("n_chars").alias("v"))
+    assert _rows(side) == _rows(lake)
+
+
+def test_duplicate_attr_keys_refused_before_writing(spark, cfg, tmp_path):
+    """A duplicated external key would fan the LEFT join out and shift
+    every later doc of its chunk onto a neighbour's value: the write is
+    refused and leaves no sidecar behind."""
+    from searchengine_spark.indexing import fsio
+    from searchengine_spark.indexing.attrs import ATTRS_DIR
+
+    path = str(tmp_path / "idx")
+    corpus, attrs = _small_index(spark, cfg, path)
+    p = load_packed_index(spark, path)
+    dups = attrs.filter(F.col("turn_idx") == 0).withColumn(
+        "n_chars", F.lit(-1).cast("long"))
+    with pytest.raises(ValueError, match="duplicate external keys"):
+        write_attrs_sidecar(p, attrs.unionByName(dups), ["n_chars"])
+    assert load_attrs_manifest(p) is None
+    assert not fsio.exists(spark, fsio.join(path, ATTRS_DIR))
+    with pytest.raises(ValueError, match="no doc_attrs sidecar"):
+        attach_attr(p, p.docmap.select("doc_id"), "n_chars")
